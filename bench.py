@@ -111,7 +111,7 @@ def ensure_bench_world() -> str:
     return BENCH_WORLD
 
 
-def _one_cycle(spark, world, cores: int, fuse: bool = False,
+def _one_cycle(spark, world, cores: int,
                prev_store_dir: str | None = None):
     import shutil
     import tempfile
@@ -139,13 +139,7 @@ def _one_cycle(spark, world, cores: int, fuse: bool = False,
     report = run_crawl_cycle(
         spark, world, store, batch_ts=NOW, days=7,
         max_per_host=10_000_000,  # drain in one politeness wave
-        use_bloom=True, bloom_segments=16, salt_buckets=max(cores // 2, 4),
-        collect_metrics=False,
-        # non-fused (default): candidates materialize once, so the wave
-        # job's python-UDF stages overlap JVM stages instead of
-        # serializing behind the discovery chain — measured equal to
-        # fused at 2-8 pinned cores and ~1.5× faster at 32 (round 3)
-        fuse_discovery=fuse,
+        use_bloom=True, bloom_segments=16, collect_metrics=False,
     )
     t1 = time.time()
     return t1 - t0, report, store_dir, (t0, t1)
@@ -245,7 +239,7 @@ def _eventlog_metrics(log_dir: str, window, cores: int) -> dict | None:
 
 
 def run_frontier_bench(cores: int, timed_cycles: int = 2,
-                       aqe: bool = False, fuse: bool = False,
+                       aqe: bool = False,
                        accounting: bool = True) -> dict:
     """Steady-state crawl-cycle throughput: one UNTIMED warmup cycle (JIT
     compilation + python worker pool — a real cluster crawls continuously,
@@ -257,10 +251,7 @@ def run_frontier_bench(cores: int, timed_cycles: int = 2,
     fetch join, literal maps for tiny state), so AQE's only observable
     effect is splitting each query into a JOB PER STAGE with sequential
     materialization barriers. Round-3 matrix at 32 cores: AQE on 61-71 s
-    vs AQE off 31 s per cycle. ``fuse`` likewise defaults OFF everywhere:
-    a materialized candidates checkpoint lets the wave job's python-UDF
-    stages overlap JVM stages (measured equal at 2-8 cores, ~1.5× faster
-    at 32).
+    vs AQE off 31 s per cycle.
 
     The TIMED cycles run with event logging OFF: inline JSON event
     logging was measured at ~17 s/cycle on the pinned 8-core leg (the
@@ -295,7 +286,7 @@ def run_frontier_bench(cores: int, timed_cycles: int = 2,
         # warmup = the SAME cycle on a fresh store: C2 needs real iteration
         # counts on the hot loops, which a toy world doesn't provide
         world = load_world(spark, ensure_bench_world())
-        _, _, d0, _ = _one_cycle(spark, world, cores, fuse=fuse)
+        _, _, d0, _ = _one_cycle(spark, world, cores)
         dirs.append(d0)
 
         # min wall over timed cycles: this host shows ±30% background
@@ -306,7 +297,6 @@ def run_frontier_bench(cores: int, timed_cycles: int = 2,
         prev_dir = d0
         for _ in range(timed_cycles):
             wall, report, d, _win = _one_cycle(spark, world, cores,
-                                               fuse=fuse,
                                                prev_store_dir=prev_dir)
             dirs.append(d)
             walls.append(wall)
@@ -347,9 +337,9 @@ def run_frontier_bench(cores: int, timed_cycles: int = 2,
         )
         spark.sparkContext.setLogLevel("ERROR")
         world = load_world(spark, ensure_bench_world())
-        _, _, d0, _ = _one_cycle(spark, world, cores, fuse=fuse)
+        _, _, d0, _ = _one_cycle(spark, world, cores)
         dirs.append(d0)
-        ev_wall, _, d1, win = _one_cycle(spark, world, cores, fuse=fuse,
+        ev_wall, _, d1, win = _one_cycle(spark, world, cores,
                                          prev_store_dir=d0)
         dirs.append(d1)
         stop_spark()  # flushes + closes the event log
@@ -469,7 +459,6 @@ def run_query_bench() -> dict:
 
 def _frontier_in_subprocess(cores: int, pin: bool = True,
                             timed_cycles: int = 1, aqe: bool = False,
-                            fuse: bool = False,
                             accounting: bool = True) -> dict:
     """Each parallelism level gets a FRESH python+JVM: consecutive
     SparkContexts in one JVM contaminate each other (leftover python
@@ -488,7 +477,7 @@ def _frontier_in_subprocess(cores: int, pin: bool = True,
            "import json, bench; "
            "print('BENCHJSON ' + json.dumps(bench.run_frontier_bench("
            f"{cores}, timed_cycles={timed_cycles}, aqe={aqe}, "
-           f"fuse={fuse}, accounting={accounting})))"]
+           f"accounting={accounting})))"]
     if pin:
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
     out = subprocess.run(

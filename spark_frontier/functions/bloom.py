@@ -1,14 +1,14 @@
 """Segmented bloom filter over xxhash64 URL keys.
 
-North_rule: "a broadcast bloom/cuckoo URL-seen filter over
-canonicalized-and-hashed URLs". The filter is built DISTRIBUTED — the seen
-table is grouped by ``seg_id = pmod(url_key, n_segments)`` and each segment's
-bitmap is built by an Arrow ``applyInPandas`` batch (numpy bit ops, no
-per-row Python) — then either:
+The engine's one approximate URL-seen filter, over canonicalized-and-hashed
+URLs. The filter is built DISTRIBUTED — the seen table is grouped by
+``seg_id = pmod(url_key, n_segments)`` and each segment's bitmap is built
+by an Arrow ``applyInPandas`` batch (numpy bit ops, no per-row Python) —
+then either:
 
 - **broadcast probe** (default; the north_rule shape): segment bitmaps are
   collected and broadcast, the frontier probes them in a vectorized pandas
-  UDF. Memory is bounded by ``bits_per_key * n_seen / 8`` bytes total; at
+  UDF. Memory is bounded by ``BITS_PER_KEY * n_seen / 8`` bytes total; at
   10^10 keys you shard the broadcast by running dedup per host-bucket wave
   so only the active buckets' segments ship, or
 - **distributed probe**: frontier repartitioned on seg_id and joined to the
@@ -23,7 +23,11 @@ both slices is exactly ``frontier ANTI JOIN seen`` — the bloom just shrinks
 the join's probe side (usually >95% of a fresh crawl batch is unseen-new).
 
 Bitmaps checkpoint to a SnapTable (Iceberg in production) so resume does
-not rebuild them: see ``pipeline/crawl.py``.
+not rebuild them. Every owner of such a table (the crawl cycle, retention,
+the crawl and corpus streams) runs the same lifecycle: ``bloom_usable``
+checks the committed summary, ``rebuild_bloom`` sizes and builds from all
+keys, ``extend_bloom`` OR-merges a delta at the recorded size. Each owner
+keeps its own table, key column and provenance key.
 """
 
 from __future__ import annotations
@@ -43,7 +47,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-_K = 7  # hash probes; with bits_per_key=14 → FPR ≈ 0.1%
+_K = 7  # hash probes; with BITS_PER_KEY=14 → FPR ≈ 0.1%
+BITS_PER_KEY = 14
+
+
+def bloom_m_bits(n_keys: int, n_segments: int = 1) -> int:
+    """Per-segment bitmap size for ``n_keys`` spread over ``n_segments``:
+    a power of two with 2× growth headroom at BITS_PER_KEY."""
+    per_seg = max(n_keys // n_segments, 1)
+    return max(64, 1 << math.ceil(math.log2(per_seg * BITS_PER_KEY * 2)))
 
 
 def _derive_hashes(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -89,7 +101,6 @@ def build_bloom_segments(
     seen_keys: DataFrame,
     key_col: str = "url_key",
     n_segments: int = 32,
-    bits_per_key: int = 14,
     m_bits: int | None = None,
 ) -> DataFrame:
     """Build per-segment bitmaps from a DataFrame of 64-bit keys.
@@ -106,8 +117,7 @@ def build_bloom_segments(
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = pdf[key_col].to_numpy(dtype=np.int64)
-        n = max(len(keys), 1)
-        mb = m_bits or max(64, 1 << math.ceil(math.log2(n * bits_per_key * 2)))
+        mb = m_bits or bloom_m_bits(len(keys))
         bitmap = np.zeros(mb // 8, dtype=np.uint8)
         _set_bits(bitmap, keys, mb)
         return pd.DataFrame(
@@ -156,6 +166,43 @@ def merge_bloom_segments(old: DataFrame, delta: DataFrame) -> DataFrame:
     return old.unionByName(delta).groupBy("seg_id").applyInPandas(
         _merge, SEGMENT_SCHEMA
     )
+
+
+def bloom_usable(meta: dict, n_segments: int | None = None) -> bool:
+    """Whether a committed bloom, given its snapshot summary, can be probed
+    and extended. The summary must record the modulus the bloom was built
+    with (probing under another one reads the wrong bitmap: false
+    negatives) and its uniform ``m_bits`` (the size a delta must be built
+    at to OR-merge). ``n_segments`` also pins the modulus. Which head the
+    bloom covers is the owner's check: each owner names its own
+    provenance key."""
+    n = meta.get("n_segments")
+    return bool(n and meta.get("m_bits")) and n_segments in (None, n)
+
+
+def rebuild_bloom(keys: DataFrame, n_segments: int) -> tuple[DataFrame, dict]:
+    """Build from EVERY key in ``keys`` (a ``url_key`` column), sized by
+    ``bloom_m_bits``. The keys are checkpointed first, so the count and the
+    build read one scan. Returns the segments and the summary fields
+    (``n_segments``, ``m_bits``) that ``bloom_usable`` and ``extend_bloom``
+    read back."""
+    from spark_frontier.storage.materialize import materialize
+
+    keys = materialize(keys)
+    fields = {"n_segments": n_segments,
+              "m_bits": bloom_m_bits(keys.count(), n_segments)}
+    return build_bloom_segments(keys, **fields), fields
+
+
+def extend_bloom(segments: DataFrame, meta: dict,
+                 delta_keys: DataFrame) -> tuple[DataFrame, dict]:
+    """OR-merge ``delta_keys`` into a usable bloom at the modulus and
+    ``m_bits`` its summary ``meta`` records. Returns the merged segments
+    and the (unchanged) summary fields."""
+    fields = {"n_segments": int(meta["n_segments"]),
+              "m_bits": int(meta["m_bits"])}
+    delta = build_bloom_segments(delta_keys, **fields)
+    return merge_bloom_segments(segments, delta), fields
 
 
 def might_contain_udf(spark, segments: DataFrame, n_segments: int):
@@ -254,7 +301,6 @@ def dedup_unseen(
     seen_count: int | None = None,
     broadcast_seen_cap: int = BROADCAST_SEEN_CAP,
     probe_fn=None,
-    distributed_prober=None,
 ) -> DataFrame:
     """Return frontier rows NOT in seen — exactly — using the bloom to
     shrink the anti-join probe side (reference dedup: repository.py:352-369
@@ -272,12 +318,6 @@ def dedup_unseen(
     shuffle join of only the maybe-seen slice instead of force-shipping
     the whole seen key set to every executor (OOM cliff as links grows).
 
-    ``distributed_prober``: layout-specific cogroup probe for
-    ``probe='distributed'`` — ``(frontier, segments, key_col, n_segments)
-    -> frontier + _maybe_seen``. Defaults to this module's bloom-layout
-    ``probe_distributed``; pass ``cuckoo.probe_distributed`` for cuckoo
-    segment tables.
-
     With ``segments=None`` falls back to the plain exact anti-join.
     """
     if segments is None:
@@ -289,8 +329,7 @@ def dedup_unseen(
         # true dups) enters the exact anti-join's shuffle. Callers pair
         # this with a materialized frontier, so the branches don't
         # recompute the upstream.
-        prober = distributed_prober or probe_distributed
-        flagged = prober(frontier, segments, key_col, n_segments)
+        flagged = probe_distributed(frontier, segments, key_col, n_segments)
         definitely_unseen = flagged.filter(~F.col("_maybe_seen")).drop(
             "_maybe_seen"
         )

@@ -18,16 +18,16 @@ north_rule's per-batch lineage.
 RESUMABILITY: a cycle processes the frontier in WAVES (max_per_host per
 host per wave). Every table commit rides an async lane keyed by table
 (strictly ordered within a table, concurrent across tables), and all
-lanes are fully drained before the cycle returns. The seen-filter is
-maintained by NEXT-cycle init catch-up (bloom_catchup/cuckoo_catchup
-fold the links delta in on the init thread, overlapped with discovery)
-— a filter whose ``covers_links`` lags the links HEAD is caught up
-incrementally, and one that can't be (retention rewrote the range) is
-rebuilt. A kill loses at most one uncommitted wave — its keys are
-still absent from links, so a resumed cycle re-crawls exactly that wave
-and the append stays duplicate-free; a bloom whose ``covers_links``
-provenance doesn't match the links HEAD is rebuilt, so no crash ordering
-can leak a duplicate past the bloom short-circuit.
+lanes are fully drained before the cycle returns. The bloom seen-filter
+is maintained by NEXT-cycle init catch-up (``bloom_catchup`` folds the
+links delta in on the init thread, overlapped with discovery) — a bloom
+whose ``covers_links`` lags the links HEAD is extended incrementally,
+and one that can't be (an unrecorded size or modulus, or a rewrite in
+the range that retention did not re-cover) is rebuilt. A kill loses at
+most one uncommitted wave — its keys are still absent from links, so a
+resumed cycle re-crawls exactly that wave and the append stays
+duplicate-free; no crash ordering can leak a duplicate past the bloom
+short-circuit.
 ``test_resume_equals_uninterrupted`` kills after wave 1 and proves the
 final links table equals the uninterrupted run's.
 """
@@ -43,7 +43,16 @@ from pyspark.sql import functions as F
 from spark_frontier.frontier.priority import build_candidates
 from spark_frontier.frontier.recency import filter_recent
 from spark_frontier.fetch.fetcher import hermetic_fetch
-from spark_frontier.functions.bloom import build_bloom_segments, dedup_unseen
+from spark_frontier.functions.bloom import (
+    BITS_PER_KEY,
+    bloom_m_bits,
+    bloom_usable,
+    build_bloom_segments,
+    dedup_unseen,
+    extend_bloom,
+    might_contain_udf,
+    rebuild_bloom,
+)
 from spark_frontier.payload.validate import validate_fetched
 from spark_frontier.politeness.backoff import (
     blocked_hosts,
@@ -159,7 +168,6 @@ def fetch_and_validate(
     wave_batch: DataFrame,
     world: dict[str, DataFrame],
     batch_ts: datetime,
-    salt_buckets: int = 4,
 ) -> DataFrame:
     """Fetch + late payload join + image/caption validation — the
     UDF-heavy tail shared by the batch cycle and the streaming path.
@@ -170,8 +178,7 @@ def fetch_and_validate(
     ``salted_repartition`` was a full extra shuffle of the widest rows
     that the join immediately re-shuffled away (measured round 3). Salting
     (``salted_repartition``) remains the skew tool for the LIVE path,
-    which partitions by host, not url. ``salt_buckets`` is kept for
-    API compatibility and ignored on the hermetic path.
+    which partitions by host, not url.
 
     Ordering/priority columns (site_seq/depth/path/sitemap_pos) have done
     their job once the wave is selected — drop them before the join
@@ -201,17 +208,15 @@ def build_link_rows(
     batch_ts: datetime,
     sites: DataFrame | None = None,
     keep: list[str] | None = None,
-    category_kernel: bool = True,
 ) -> DataFrame:
     """Link rows for the sink, incl. V6-V9 categorization (the reference
     categorizes every saved article, crawl_scheduler.py:276-294): broadcast
     site_type/sport_focus from sites, then the precedence chain
     (forced focus ≻ URL segment ≻ URL pattern ≻ caption score ≻ 'sports').
 
-    ``category_kernel`` (default on — the wave path): precedence steps 3-4
-    run in the Arrow kernel (RE2 pattern pass + per-distinct-text content
-    scoring), value-identical to the all-JVM chain (grid parity test);
-    steps 1-2 stay JVM either way."""
+    Precedence steps 3-4 run in the Arrow kernel (RE2 pattern pass +
+    per-distinct-text content scoring), value-identical to the all-JVM
+    chain (grid parity test); steps 1-2 stay JVM."""
     from spark_frontier.extract.category import with_category
     from spark_frontier.functions.urls import sha256_hex
 
@@ -237,7 +242,7 @@ def build_link_rows(
     rows = with_category(
         rows, url="url", title="title", content="caption",
         site_type="site_type", sport_focus="sport_focus",
-        out="sport_category", step34_kernel=category_kernel,
+        out="sport_category", step34_kernel=True,
     )
     return (
         rows.withColumn("first_seen_at", F.lit(batch_ts))
@@ -257,27 +262,23 @@ def run_crawl_cycle(
     use_bloom: bool = True,
     bloom_segments: int = 16,
     stop_after_wave: int | None = None,
-    salt_buckets: int = 4,
     collect_metrics: bool = True,
-    fuse_discovery: bool = False,
     bloom_probe: str = "broadcast",
-    seen_filter: str = "bloom",
     process_within_days: int | None = None,
     report: CycleReport | None = None,
 ) -> CycleReport:
     """Run one crawl cycle to frontier exhaustion (or stop_after_wave, for
     the resume test). Returns funnel counters.
 
+    ``use_bloom``/``bloom_segments``: the bloom seen-filter in front of the
+    exact anti-join, and its segment modulus. The bloom is built on the
+    init thread, caught up from the links delta when it lags
+    (``bloom_catchup``), and rebuilt only when it cannot be extended.
+
     ``bloom_probe``: 'broadcast' (default; right while total bitmap size
     fits executor memory) or 'distributed' (cogroup probe, no driver
-    collect — the 10^10-key path).
-
-    ``seen_filter``: 'bloom' (default) or 'cuckoo' — same
-    negative-pass-through topology, but the cuckoo variant supports
-    DELETE, so ``retention_cleanup`` removes expired keys in place
-    instead of rebuilding from the full links table (broadcast probe
-    only; exactness is identical — the probe never decides, the exact
-    anti-join does).
+    collect — the 10^10-key path). Exactness is identical either way —
+    the probe never decides, the exact anti-join does.
 
     ``process_within_days``: the reference's run-once quirk
     (crawl_scheduler.py:367-372): DISCOVER with ``days`` (7) but re-filter
@@ -308,9 +309,8 @@ def run_crawl_cycle(
     try:
         return _run_cycle_inner(
             spark, world, store, batch_ts, days, max_per_host, max_waves,
-            use_bloom, bloom_segments, stop_after_wave, salt_buckets,
-            collect_metrics, fuse_discovery, bloom_probe, seen_filter,
-            process_within_days, report, _tr,
+            use_bloom, bloom_segments, stop_after_wave, collect_metrics,
+            bloom_probe, process_within_days, report, _tr,
         )
     finally:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -321,27 +321,15 @@ def run_crawl_cycle(
 
 def _run_cycle_inner(
     spark, world, store, batch_ts, days, max_per_host, max_waves, use_bloom,
-    bloom_segments, stop_after_wave, salt_buckets, collect_metrics,
-    fuse_discovery, bloom_probe, seen_filter, process_within_days, report,
-    _tr,
+    bloom_segments, stop_after_wave, collect_metrics, bloom_probe,
+    process_within_days, report, _tr,
 ) -> CycleReport:
-    if seen_filter not in ("bloom", "cuckoo"):
-        raise ValueError(f"unknown seen_filter: {seen_filter!r}")
-    # layout-specific cogroup prober for the distributed probe path (the
-    # 10^10-key shape: the cuckoo table at ~2.5 B/key with headroom is
-    # tens of GB — it must never ship whole to every executor)
-    if seen_filter == "cuckoo":
-        from spark_frontier.functions.cuckoo import (
-            probe_distributed as distributed_prober,
-        )
-    else:
-        distributed_prober = None  # dedup_unseen defaults to the bloom's
     sites = world["sites"].filter(F.col("is_active")).orderBy("site_seq")
     seeds = sites.select("site_id", "site_seq", "sitemap_url")
 
     links_tbl = store.table("links")
     host_tbl = store.table("host_state")
-    bloom_tbl = store.table("bloom" if seen_filter == "bloom" else "cuckoo")
+    bloom_tbl = store.table("bloom")
     logs_tbl = store.table("crawl_logs")
 
     # Async state-commit lanes: links / host_state / bloom /
@@ -389,6 +377,75 @@ def _run_cycle_inner(
         pending.append(fut)
         return fut
 
+    def _seen_bloom(seen, links_snapshot):
+        """The bloom fronting ``seen`` (the links table at
+        ``links_snapshot``) and the exact seen-key count.
+
+        EXACTNESS INVARIANT: a bloom miss bypasses the exact anti-join, so
+        the bloom must be a SUPERSET of the seen set it fronts. Enforced by
+        provenance, not commit ordering: every bloom commit records the
+        links snapshot id it covers (``covers_links``). A bloom that lags
+        the links HEAD is extended by the links delta; one that cannot be
+        (no recorded size or modulus, or a rewrite in the range) is rebuilt
+        from the full seen set. Extra bloom keys are harmless (extra
+        anti-join probes only)."""
+
+        def _commit(op, segments, fields):
+            _async(bloom_tbl.overwrite, segments,
+                   summary={"op": op, "covers_links": links_snapshot,
+                            **fields},
+                   small=True, _lane="links")
+
+        segments = bloom_tbl.read(spark)
+        meta = bloom_tbl.summary()
+        if segments is not None and not bloom_usable(meta, bloom_segments):
+            segments = None
+        covers = meta.get("covers_links")
+        if segments is not None and covers != links_snapshot:
+            # CATCH-UP (round 5): cycles no longer commit an end-of-cycle
+            # bloom delta — it was the entire commit tail (~4 s at 8
+            # cores, pure serial drain). The NEXT cycle folds the links
+            # delta in HERE instead, on the init thread, hidden behind
+            # sitemap discovery. Requires the recorded snapshot to be an
+            # ancestor readable incrementally.
+            try:
+                delta = links_tbl.read_changes(spark, covers)
+            except ValueError:
+                segments = None
+            else:
+                if delta is not None:
+                    segments, fields = extend_bloom(
+                        segments, meta, delta.select("url_key")
+                    )
+                    segments = materialize(segments)
+                    _commit("bloom_catchup", segments, fields)
+        if segments is not None:
+            # ONE agg job: capacity check + the exact seen count the
+            # broadcast-seen gate needs; runs on the caught-up segments,
+            # so an outgrown filter still rebuilds bigger
+            cap = segments.agg(
+                F.sum("m_bits").alias("mb"),
+                F.sum("n_items").alias("n"),
+                F.count_distinct("m_bits").alias("sizes"),
+            ).collect()[0]
+            if not ((cap["n"] and cap["n"] * BITS_PER_KEY > cap["mb"])
+                    or cap["sizes"] != 1):
+                return segments, int(cap["n"] or 0)
+        # full build at the shared size (UNIFORM m_bits, so later deltas
+        # OR-merge). Called here rather than through rebuild_bloom, which
+        # would add a checkpoint of the seen keys to the init thread;
+        # perfbench's traced run also replays this module's
+        # build_bloom_segments call.
+        n_seen = seen.count()
+        fields = {"n_segments": bloom_segments,
+                  "m_bits": bloom_m_bits(n_seen, bloom_segments)}
+        segments = build_bloom_segments(
+            seen.select("url_key"), n_segments=bloom_segments,
+            m_bits=fields["m_bits"],
+        ).transform(materialize)
+        _commit("bloom_build", segments, fields)
+        return segments, n_seen
+
     # Cycle-init state (seen read, bloom provenance check/agg/rebuild,
     # host-state read) is INDEPENDENT of sitemap discovery, so it runs on
     # a pool thread in the "init" FAIR scheduler pool: its small jobs
@@ -399,221 +456,17 @@ def _run_cycle_inner(
         # SnapTable file list is immutable per snapshot). In-cycle
         # additions are covered by the `attempted` set, so the bloom built
         # here stays valid for the whole cycle — waves never touch it.
-        #
-        # EXACTNESS INVARIANT: a bloom miss bypasses the exact anti-join,
-        # so the bloom must be a SUPERSET of the seen set it fronts.
-        # Enforced by provenance, not commit ordering: every bloom commit
-        # records the links snapshot id it covers (``covers_links``); at
-        # cycle start a bloom whose covers_links ≠ the current links HEAD
-        # (crash before the bloom commit, retention delete, ...) is
-        # rebuilt from the full seen set. Extra bloom keys are harmless
-        # (extra anti-join probes only).
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "init")
         try:
             links_snapshot = links_tbl.snapshot_id
             seen = links_tbl.read(spark)
             segments = None
-            bloom_m_bits = None
             seen_count = None  # known exactly when the bloom path runs
             if seen is None:
                 seen = spark.createDataFrame([], "url_key long")
                 seen_count = 0
-            elif use_bloom and seen_filter == "cuckoo":
-                # cuckoo variant: same provenance discipline as the bloom
-                # (covers_links + modulus), but capacity lives in the
-                # filter itself (insert raises when full) so there is no
-                # m_bits agg; n_keys rides the summary for the
-                # broadcast-seen gate
-                segments = bloom_tbl.read(spark)
-                if segments is not None:
-                    _cmeta = bloom_tbl.summary()
-                    _cap = (int(_cmeta.get("n_buckets") or 0) * 4
-                            * bloom_segments)
-                    _ccovers = _cmeta.get("covers_links")
-                    _ckeys = int(_cmeta.get("n_keys") or 0)
-                    if (_cmeta.get("n_segments") != bloom_segments
-                            # outgrown (insert would overflow) → rebuild
-                            # bigger, the bloom's capacity-check analogue
-                            or _ckeys > 0.8 * _cap):
-                        segments = None
-                    elif _ccovers != links_snapshot:
-                        # round-5 catch-up (see the bloom branch): fold
-                        # the links delta in-place on the init thread —
-                        # the cuckoo's incremental insert — instead of a
-                        # cycle-end delta commit in the tail
-                        delta_df = None
-                        if _ccovers:
-                            try:
-                                delta_df = links_tbl.read_changes(
-                                    spark, _ccovers
-                                )
-                            except ValueError:
-                                segments = None
-                        else:
-                            segments = None
-                        if segments is not None and delta_df is not None:
-                            from spark_frontier.functions.cuckoo import (
-                                insert_cuckoo_keys,
-                            )
-
-                            nk = materialize(delta_df.select("url_key"))
-                            n_total = _ckeys + nk.count()
-                            if n_total > 0.8 * _cap:
-                                segments = None  # would overflow
-                            else:
-                                try:
-                                    segments = materialize(
-                                        insert_cuckoo_keys(
-                                            segments, nk,
-                                            n_segments=bloom_segments,
-                                        )
-                                    )
-                                except Exception:
-                                    segments = None  # full → rebuild
-                                else:
-                                    seen_count = n_total
-                                    _async(
-                                        bloom_tbl.overwrite, segments,
-                                        summary={
-                                            "op": "cuckoo_catchup",
-                                            "covers_links": links_snapshot,
-                                            "n_segments": bloom_segments,
-                                            "n_buckets": _cmeta.get(
-                                                "n_buckets"),
-                                            "n_keys": n_total,
-                                        },
-                                        small=True, _lane="links",
-                                    )
-                        elif segments is not None:
-                            seen_count = _ckeys
-                    else:
-                        seen_count = _ckeys
-                if segments is None:
-                    import math as _math
-
-                    from spark_frontier.functions.cuckoo import (
-                        build_cuckoo_segments,
-                    )
-
-                    n_seen = seen.count()
-                    seen_count = n_seen
-                    # floor + 2× growth headroom at load 0.7: a fresh
-                    # store's filter must absorb whole cycles of inserts
-                    # before the capacity check forces a resize
-                    per_seg = max(
-                        2 * n_seen / (bloom_segments * 4 * 0.7), 1
-                    )
-                    nb = max(1024, 1 << _math.ceil(_math.log2(per_seg)))
-                    segments = build_cuckoo_segments(
-                        seen.select("url_key"), n_segments=bloom_segments,
-                        n_buckets=nb,
-                    ).transform(materialize)
-                    _async(
-                        bloom_tbl.overwrite, segments,
-                        summary={"op": "cuckoo_build",
-                                 "covers_links": links_snapshot,
-                                 "n_segments": bloom_segments,
-                                 "n_buckets": nb,
-                                 "n_keys": n_seen},
-                        small=True, _lane="links",
-                    )
             elif use_bloom:
-                segments = bloom_tbl.read(spark)
-                if segments is not None:
-                    _bmeta = bloom_tbl.summary()
-                    _covers = _bmeta.get("covers_links")
-                    _mb_meta = _bmeta.get("m_bits")
-                    if _bmeta.get("n_segments") != bloom_segments:
-                        # built under a different — or UNRECORDED
-                        # (legacy snapshot: assuming it used the current
-                        # modulus would probe the wrong bitmap → false
-                        # negatives) — segment modulus → full rebuild
-                        segments = None
-                    elif _covers != links_snapshot:
-                        # CATCH-UP (round 5): cycles no longer commit an
-                        # end-of-cycle bloom delta — it was the entire
-                        # commit tail (~4 s at 8 cores, pure serial
-                        # drain). The NEXT cycle folds the links delta
-                        # in HERE instead, on the init thread, hidden
-                        # behind sitemap discovery. Requires the
-                        # recorded snapshot to be an ancestor readable
-                        # incrementally; a rewrite in the range
-                        # (retention) or missing provenance/m_bits falls
-                        # back to the full rebuild below — the existing
-                        # self-healing discipline.
-                        delta_df = None
-                        if _covers and _mb_meta:
-                            try:
-                                delta_df = links_tbl.read_changes(
-                                    spark, _covers
-                                )
-                            except ValueError:
-                                segments = None
-                        else:
-                            segments = None
-                        if segments is not None and delta_df is not None:
-                            from spark_frontier.functions.bloom import (
-                                merge_bloom_segments,
-                            )
-
-                            dseg = build_bloom_segments(
-                                delta_df.select("url_key"),
-                                n_segments=bloom_segments,
-                                m_bits=int(_mb_meta),
-                            )
-                            segments = materialize(
-                                merge_bloom_segments(segments, dseg)
-                            )
-                            _async(
-                                bloom_tbl.overwrite, segments,
-                                summary={"op": "bloom_catchup",
-                                         "covers_links": links_snapshot,
-                                         "n_segments": bloom_segments,
-                                         "m_bits": int(_mb_meta)},
-                                small=True, _lane="links",
-                            )
-                    if segments is not None:
-                        # ONE agg job: capacity check + the m_bits the
-                        # probe needs (a second agg per cycle is pure
-                        # serial tail); runs on the caught-up segments,
-                        # so an outgrown filter still rebuilds bigger
-                        cap = segments.agg(
-                            F.sum("m_bits").alias("mb"),
-                            F.sum("n_items").alias("n"),
-                            F.count_distinct("m_bits").alias("sizes"),
-                            F.max("m_bits").alias("mx"),
-                        ).collect()[0]
-                        if ((cap["n"] and cap["n"] * 14 > cap["mb"])
-                                or cap["sizes"] != 1):
-                            segments = None  # outgrown/non-uniform
-                        else:
-                            bloom_m_bits = cap["mx"]
-                            seen_count = int(cap["n"] or 0)
-                if segments is None:
-                    # UNIFORM m_bits across segments (2× headroom over the
-                    # current seen count) so end-of-cycle delta segments
-                    # can be OR-merged
-                    import math as _math
-
-                    n_seen = seen.count()
-                    seen_count = n_seen
-                    per_seg = max(n_seen // bloom_segments, 1)
-                    uniform_bits = max(
-                        64, 1 << _math.ceil(_math.log2(per_seg * 14 * 2))
-                    )
-                    segments = build_bloom_segments(
-                        seen.select("url_key"), n_segments=bloom_segments,
-                        m_bits=uniform_bits,
-                    ).transform(materialize)
-                    _async(
-                        bloom_tbl.overwrite, segments,
-                        summary={"op": "bloom_build",
-                                 "covers_links": links_snapshot,
-                                 "n_segments": bloom_segments,
-                                 "m_bits": uniform_bits},
-                        small=True, _lane="links",
-                    )
-                    bloom_m_bits = uniform_bits  # known by construction
+                segments, seen_count = _seen_bloom(seen, links_snapshot)
 
             # host state: read once, then carried IN MEMORY between waves
             # (the table write is resume state only → async)
@@ -656,24 +509,8 @@ def _run_cycle_inner(
             # sc.broadcast serialization) off the wave critical path too
             probe_fn = None
             if segments is not None and bloom_probe == "broadcast":
-                if seen_filter == "cuckoo":
-                    from spark_frontier.functions.cuckoo import (
-                        cuckoo_contains_udf,
-                    )
-
-                    probe_fn = cuckoo_contains_udf(
-                        spark, segments, bloom_segments
-                    )
-                else:
-                    from spark_frontier.functions.bloom import (
-                        might_contain_udf,
-                    )
-
-                    probe_fn = might_contain_udf(
-                        spark, segments, bloom_segments
-                    )
-            return (seen, segments, bloom_m_bits, hs, seen_count, hs_rows0,
-                    probe_fn)
+                probe_fn = might_contain_udf(spark, segments, bloom_segments)
+            return seen, segments, hs, seen_count, hs_rows0, probe_fn
         finally:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
@@ -731,22 +568,16 @@ def _run_cycle_inner(
             candidates = candidates.filter(
                 F.col("lastmod").isNull() | dd.between(0, process_within_days)
             )
-        if fuse_discovery:
-            # single-wave drain mode (bench): keep discovery LAZY so canonical-
-            # ize/robots/recency fuse into the wave job — one pipeline, no
-            # materialization barrier. Wave ≥ 2 checkpoints on entry instead.
-            candidates_ckpt = False
-        else:
-            # fuse the within-days count into the materialize job itself
-            # (Observation) instead of a separate count job — one fewer
-            # serial job + driver gap per cycle (pure serial tail at any
-            # core count)
-            obs_cand = Observation("candidates_n")
-            candidates = candidates.observe(
-                obs_cand, F.count(F.lit(1)).alias("n")
-            ).transform(materialize)
-            candidates_ckpt = True
-            report.entries_within_days = int(obs_cand.get["n"] or 0)
+        # materialize once, so the wave job's python-UDF stages overlap JVM
+        # stages instead of serializing behind the discovery chain, and
+        # fuse the within-days count into that job (Observation) instead
+        # of a separate count job — one fewer serial job + driver gap per
+        # cycle (pure serial tail at any core count)
+        obs_cand = Observation("candidates_n")
+        candidates = candidates.observe(
+            obs_cand, F.count(F.lit(1)).alias("n")
+        ).transform(materialize)
+        report.entries_within_days = int(obs_cand.get["n"] or 0)
         if collect_metrics:
             report.sitemap_entries_total = entries.count()
             report.robots_denied = with_robots.filter(
@@ -769,8 +600,7 @@ def _run_cycle_inner(
             )
 
 
-        (seen, segments, bloom_m_bits, hs, seen_count, hs_rows,
-         probe_fn) = fut_state.result()
+        seen, segments, hs, seen_count, hs_rows, probe_fn = fut_state.result()
         _tr("state_init")
 
         # In-cycle attempted set: the reference iterates its new-URL list ONCE
@@ -790,9 +620,6 @@ def _run_cycle_inner(
         wave = 0
         while wave < max_waves:
             wave += 1
-            if wave == 2 and not candidates_ckpt:
-                candidates = candidates.transform(materialize)
-                candidates_ckpt = True
             if hs_next is not None:
                 hs = hs_next.transform(materialize)
                 hs_next = None
@@ -811,7 +638,6 @@ def _run_cycle_inner(
                 candidates, seen.select("url_key"), segments=segments,
                 n_segments=bloom_segments, probe=bloom_probe,
                 seen_count=seen_count, probe_fn=probe_fn,
-                distributed_prober=distributed_prober,
             )
             if attempted is not None:
                 unseen = unseen.join(attempted, on="url_key", how="left_anti")
@@ -844,17 +670,10 @@ def _run_cycle_inner(
             # (Round-1 ran 4 checkpoints + 4 commits per wave; the serial
             # barrier tail was the measured scaling-efficiency killer.)
             obs_v = Observation(f"valid_w{wave}")
-            rows_obs = fetch_and_validate(
-                scheduled, world, batch_ts, salt_buckets
-            )
+            rows_obs = fetch_and_validate(scheduled, world, batch_ts)
             rows_obs = build_link_rows(
                 rows_obs, batch_ts, sites=world["sites"],
                 keep=["politeness_deadline"],
-                # (with_category's dedup_content mode was also tried here:
-                # its distinct-text broadcast side recomputes the whole
-                # un-checkpointed wave upstream as a SERIAL pre-job —
-                # measured ~5 s to save ~1.4 s at 32 cores. The fused
-                # Arrow kernel keeps the dedup per-batch instead.)
             ).observe(
                 obs_v,
                 F.count(F.lit(1)).alias("n"),
@@ -964,12 +783,12 @@ def _run_cycle_inner(
                 else attempted.unionByName(slice_df)
             )
 
-        # No end-of-cycle bloom/cuckoo delta (round 5): the delta build +
-        # merge + commit were the cycle's whole async-drain tail (no
-        # compute left to hide them behind). The NEXT cycle's init
-        # thread folds the links delta into the filter incrementally
-        # (bloom_catchup / cuckoo_catchup above), overlapped with
-        # sitemap discovery — same provenance discipline, zero tail.
+        # No end-of-cycle bloom delta (round 5): the delta build + merge +
+        # commit were the cycle's whole async-drain tail (no compute left
+        # to hide them behind). The NEXT cycle's init thread folds the
+        # links delta into the filter incrementally (bloom_catchup in
+        # _seen_bloom), overlapped with sitemap discovery — same
+        # provenance discipline, zero tail.
 
         # host-state: ONE commit per cycle (the reference loses this state
         # entirely on restart — rate_limiter.py:16-24; we persist the
@@ -1112,80 +931,26 @@ def retention_cleanup(store: SnapStore, spark: SparkSession,
     if links.exists():
         cutoff = (f"first_seen_at < timestamp'{now.isoformat(sep=' ')}' "
                   f"- INTERVAL {ttl_days} DAYS")
-        cuckoo = store.table("cuckoo")
-        expired = None
-        catchup = None
-        meta = {}
-        if cuckoo.exists():
-            # Since round 5 the filter may lag links (cycle-end delta
-            # commits moved to next-cycle init catch-up), and deleting a
-            # key that was never INSERTED can evict a colliding key's
-            # fingerprint — a false negative. So: fold the uncovered
-            # links delta in FIRST (the cuckoo's incremental insert),
-            # then delete. Both input sets are captured BEFORE the
-            # delete_where rewrite. If the delta isn't incrementally
-            # readable, skip the in-place path — the rewrite invalidates
-            # provenance and the next cycle rebuilds from scratch.
-            meta = cuckoo.summary()
-            in_place = True
-            if meta.get("covers_links") != links.snapshot_id:
-                try:
-                    catchup = links.read_changes(
-                        spark, meta.get("covers_links")
-                    ) if meta.get("covers_links") else None
-                    if catchup is not None:
-                        catchup = materialize(catchup.select("url_key"))
-                    in_place = catchup is not None
-                except ValueError:
-                    in_place = False
-            if in_place:
-                # capture the keys BEFORE the delete rewrites the table —
-                # they are exactly what leaves the cuckoo filter
-                expired = materialize(
-                    links.read(spark).filter(cutoff).select("url_key")
-                )
+        bloom = store.table("bloom")
+        n_seg = bloom.summary().get("n_segments")
         links.delete_where(
             cutoff,
             spark,
             summary={"op": "retention", "ttl_days": ttl_days},
         )
-        if expired is not None:
-            # the cuckoo's whole point: expired keys DELETE in place —
-            # O(expired + uncovered delta), not the bloom's O(seen)
-            # rebuild scan
-            from spark_frontier.functions.cuckoo import (
-                delete_cuckoo_keys,
-                insert_cuckoo_keys,
+        # seen-set shrank → the bloom (no delete support) is rebuilt once,
+        # in the shape the next cycle extends: the filter's own modulus,
+        # uniform m_bits, covering the post-delete head. A bloom that
+        # records no modulus is left for the next cycle to rebuild.
+        seen = links.read(spark)
+        if seen is not None and n_seg:
+            segments, fields = rebuild_bloom(
+                seen.select("url_key"), int(n_seg)
             )
-
-            n_seg = int(meta.get("n_segments") or 16)
-            n_exp = expired.count()
-            n_keys = int(meta.get("n_keys") or 0)
-            segs = cuckoo.read(spark)
-            if catchup is not None:
-                segs = insert_cuckoo_keys(segs, catchup, n_segments=n_seg)
-                n_keys += catchup.count()
-            cuckoo.overwrite(
-                materialize(delete_cuckoo_keys(
-                    segs, expired, n_segments=n_seg
-                )),
-                summary={"op": "cuckoo_delete_after_retention",
-                         "n_segments": n_seg,
-                         "n_buckets": meta.get("n_buckets"),
-                         "n_keys": max(n_keys - n_exp, 0),
-                         "covers_links": links.snapshot_id},
-                small=True,
-            )
-        # seen-set changed → a bloom (no delete support) must be rebuilt
-        bloom = store.table("bloom")
-        if bloom.exists():
             bloom.overwrite(
-                build_bloom_segments(
-                    links.read(spark).select("url_key"), n_segments=16
-                ),
+                segments,
                 summary={"op": "bloom_rebuild_after_retention",
-                         "n_segments": 16,
-                         "covers_links": links.snapshot_id},
+                         "covers_links": links.snapshot_id, **fields},
             )
     # append-heavy log tables accumulate one file set per commit; the
     # 24 h maintenance pass bin-packs them (links is rewritten by the

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_frontier.session import tasks_per_core
 from spark_frontier.sitemap.parser import parse_sitemaps
 from spark_frontier.storage.materialize import materialize
 
@@ -98,11 +99,8 @@ def expand_sitemap_tree(
         # skew — a partition that hashed two large sitemaps holds the
         # whole level. >1 trades a little per-task overhead for scheduler
         # slack; tunable because the right value is corpus-dependent.
-        import os as _os
-
-        _t = max(int(_os.environ.get(
-            "SPARK_FRONTIER_PARSE_TASKS_PER_CORE", "1")), 1)
-        par = spark.sparkContext.defaultParallelism * _t
+        par = spark.sparkContext.defaultParallelism * tasks_per_core(
+            "SPARK_FRONTIER_PARSE_TASKS_PER_CORE")
         parsed = parse_sitemaps(
             docs.select("sitemap_url", "content").repartition(par, "sitemap_url")
         )

@@ -403,7 +403,7 @@ class SnapTable:
         O(few) commits per state table, so an unbounded snapshots/ dir
         is a real leak at 10^5 cycles. ``read_changes()`` across an
         expired boundary raises ValueError, which every caller already
-        treats as rebuild-from-scratch (the bloom/cuckoo provenance
+        treats as rebuild-from-scratch (the bloom provenance
         discipline); ``read_at()`` on an expired id fails like Iceberg's
         VERSION AS OF on an expired snapshot."""
         keep_last = max(1, keep_last)

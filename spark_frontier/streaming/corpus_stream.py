@@ -37,6 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_frontier.functions.bloom import (
+    bloom_usable,
+    extend_bloom,
+    might_contain_udf,
+    rebuild_bloom,
+)
 from spark_frontier.storage import SnapStore
 from spark_frontier.storage.materialize import materialize
 
@@ -112,15 +118,13 @@ def start_corpus_stream(
         # bloom probe: only when provenance matches the CURRENT head —
         # stale blooms are skipped (superset invariant), never trusted
         segments = bloom_tbl.read(spark_b) if use_bloom else None
-        meta = bloom_tbl.summary() if segments is not None else {}
-        if segments is not None and (
-            meta.get("covers") != head_before or not meta.get("n_segments")
+        meta = bloom_tbl.summary()
+        if segments is not None and not (
+            bloom_usable(meta) and meta.get("covers") == head_before
         ):
             segments = None
         if committed is not None:
             if segments is not None:
-                from spark_frontier.functions.bloom import might_contain_udf
-
                 probe = might_contain_udf(
                     spark_b, segments, int(meta["n_segments"])
                 )
@@ -161,48 +165,23 @@ def start_corpus_stream(
             seg_in, meta_in = segments, meta
 
             def _bloom_maintain():
-                from spark_frontier.functions.bloom import (
-                    build_bloom_segments,
-                    merge_bloom_segments,
-                )
-
                 if seg_in is not None:
-                    m_bits = int(
-                        meta_in.get("m_bits")
-                        or seg_in.agg(F.max("m_bits")).collect()[0][0]
-                    )
-                    merged = merge_bloom_segments(
-                        seg_in,
-                        build_bloom_segments(
-                            new_keys,
-                            n_segments=int(meta_in["n_segments"]),
-                            m_bits=m_bits,
-                        ),
-                    )
-                    n_seg_out, m_out = int(meta_in["n_segments"]), m_bits
+                    merged, fields = extend_bloom(seg_in, meta_in, new_keys)
                 else:
                     # stale/missing: ONE scan of the post-append head
-                    import math
-
                     all_docs = tbl.read(spark_b)
                     if all_docs is None:
                         return
-                    keys = all_docs.select(
-                        F.xxhash64("fingerprint").alias("url_key")
+                    merged, fields = rebuild_bloom(
+                        all_docs.select(
+                            F.xxhash64("fingerprint").alias("url_key")
+                        ),
+                        bloom_segments,
                     )
-                    n_seen = keys.count()
-                    per_seg = max(n_seen // bloom_segments, 1)
-                    m_out = max(
-                        64, 1 << math.ceil(math.log2(per_seg * 14 * 2))
-                    )
-                    merged = build_bloom_segments(
-                        keys, n_segments=bloom_segments, m_bits=m_out
-                    )
-                    n_seg_out = bloom_segments
                 bloom_tbl.overwrite(
                     merged,
                     summary={"op": "corpus_bloom", "covers": head_after,
-                             "n_segments": n_seg_out, "m_bits": m_out},
+                             **fields},
                     small=True,
                 )
 

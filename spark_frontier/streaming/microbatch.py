@@ -47,7 +47,12 @@ from pyspark.sql import functions as F
 
 from spark_frontier.frontier.priority import build_candidates
 from spark_frontier.frontier.recency import filter_recent
-from spark_frontier.functions.bloom import dedup_unseen
+from spark_frontier.functions.bloom import (
+    bloom_usable,
+    dedup_unseen,
+    extend_bloom,
+    rebuild_bloom,
+)
 from spark_frontier.pipeline.crawl import (
     build_link_rows,
     fetch_and_validate,
@@ -228,21 +233,14 @@ def start_stream_crawl(
         bloom_tbl = store.table("bloom")
         links_prev_sid = links_tbl.snapshot_id  # head BEFORE this batch
         segments = bloom_tbl.read(spark) if use_bloom else None
-        n_seg = 0
-        meta: dict = {}
-        if segments is not None:
-            meta = bloom_tbl.summary()
-            # the probe modulus MUST be the build modulus (a mismatch maps
-            # keys to the wrong bitmap → false negatives → duplicate leak),
-            # so it rides in the snapshot summary; no/old summary → skip
-            if (meta.get("covers_links") != links_prev_sid
-                    or not meta.get("n_segments")):
-                segments = None
-            else:
-                n_seg = int(meta["n_segments"])
+        meta = bloom_tbl.summary()
+        if segments is not None and not (
+            bloom_usable(meta) and meta.get("covers_links") == links_prev_sid
+        ):
+            segments = None
         unseen = dedup_unseen(
             candidates, seen.select("url_key"), segments=segments,
-            n_segments=n_seg or 32,
+            n_segments=int(meta.get("n_segments") or 32),
         )
         host_tbl = store.table("host_state")
         from spark_frontier.politeness.backoff import read_host_state
@@ -293,52 +291,25 @@ def start_stream_crawl(
             # validated against links_prev_sid; the delta covers exactly
             # links_head.
             new_keys = valid_rows.select("url_key")
-            seg_in, nseg_in = segments, n_seg
-            meta_in = meta if segments is not None else {}
+            seg_in, meta_in = segments, meta
 
             def _bloom_maintain():
-                from spark_frontier.functions.bloom import (
-                    build_bloom_segments,
-                    merge_bloom_segments,
-                )
-
                 if seg_in is not None:
-                    # m_bits rides in the summary (one less agg job per
-                    # batch); legacy snapshots without it pay the agg once
-                    m_bits = int(
-                        meta_in.get("m_bits")
-                        or seg_in.agg(F.max("m_bits")).collect()[0][0]
-                    )
-                    merged = merge_bloom_segments(
-                        seg_in,
-                        build_bloom_segments(
-                            new_keys, n_segments=nseg_in, m_bits=m_bits
-                        ),
-                    )
-                    covers, out_seg = links_head, nseg_in
+                    merged, fields = extend_bloom(seg_in, meta_in, new_keys)
+                    covers = links_head
                 else:
-                    import math
-
-                    out_seg = 16
-                    # ONE links scan: checkpoint the key column, then both
-                    # the count (for sizing) and the build read memory
+                    # ONE links scan (rebuild_bloom checkpoints the keys)
                     covers = links_tbl.snapshot_id
                     seen_now = links_tbl.read(spark)
                     if seen_now is None:
                         return
-                    keys_all = materialize(seen_now.select("url_key"))
-                    n_seen = keys_all.count()
-                    per_seg = max(n_seen // out_seg, 1)
-                    m_bits = max(
-                        64, 1 << math.ceil(math.log2(per_seg * 14 * 2))
-                    )
-                    merged = build_bloom_segments(
-                        keys_all, n_segments=out_seg, m_bits=m_bits
+                    merged, fields = rebuild_bloom(
+                        seen_now.select("url_key"), 16
                     )
                 bloom_tbl.overwrite(
                     materialize(merged),
-                    summary={"op": "bloom_stream", "n_segments": out_seg,
-                             "m_bits": m_bits, "covers_links": covers},
+                    summary={"op": "bloom_stream", "covers_links": covers,
+                             **fields},
                     small=True,
                 )
 

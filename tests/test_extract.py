@@ -154,50 +154,6 @@ def test_with_category_jvm_matches_python(spark):
                                                   got[(u, t, c, st, fo)])
 
 
-def test_with_category_dedup_mode_identical(spark):
-    """dedup_content=True (distinct-text scoring + broadcast join-back)
-    returns exactly the per-row chain's categories on the same fuzz grid,
-    including ties, the MIN_CONFIDENCE gate, and resolved rows (which
-    collapse onto the "" text)."""
-    from spark_frontier.extract.category import with_category
-
-    rows = []
-    urls = [
-        "https://s.com/cricket/match",
-        "https://s.com/nba/game",
-        "https://s.com/news/team-quarterback-x",
-        "https://s.com/x/super-bowl-recap",
-        "https://s.com/a/-soccer-weekly",
-        "https://s.com/plain/item-1",
-        "https://s.com/plain/item-2",
-        "https://s.com/",
-    ]
-    titles = ["", "Messi and Ronaldo goal striker report", "nfl nfl nfl",
-              "wicket bowler century ipl", "nfl soccer", None]
-    contents = ["", "penalty offside var corner kick", "lbw drs stumped",
-                "home run pitcher strikeout inning bullpen", None]
-    stypes = [None, "specific", "general"]
-    focuses = [None, "tennis", ""]
-    i = 0
-    for u in urls:
-        for t in titles:
-            for c in contents:
-                rows.append((u, t, c, stypes[i % 3], focuses[(i // 3) % 3]))
-                i += 1
-    df = spark.createDataFrame(
-        rows, "url string, title string, caption string, site_type string, "
-              "sport_focus string")
-    key = lambda r: (r["url"], r["title"], r["caption"], r["site_type"],  # noqa: E731
-                     r["sport_focus"])
-    per_row = {key(r): r["sport_category"] for r in with_category(df).collect()}
-    deduped = {key(r): r["sport_category"]
-               for r in with_category(df, dedup_content=True).collect()}
-    assert per_row == deduped
-    # same column set/order out of both modes
-    assert with_category(df).columns == with_category(
-        df, dedup_content=True).columns
-
-
 def test_with_category_step34_kernel_identical(spark):
     """step34_kernel=True (RE2 pattern pass + per-distinct-text python
     scoring) returns exactly the per-row JVM chain's categories — and

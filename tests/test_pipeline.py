@@ -305,79 +305,56 @@ def test_links_append_failure_aborts_watermark(spark, world, tmp_path_factory,
     assert store.table("links").snapshot_id is None
 
 
-def test_cuckoo_seen_filter_matches_bloom_and_deletes_on_ttl(
+def test_bloom_probe_parity_and_retention_catchup(
     spark, world, tmp_path_factory
 ):
-    """seen_filter='cuckoo' end-to-end: cycle results identical to the
-    bloom mode (the probe never decides); retention DELETES expired keys
-    from the filter in place (no O(seen) rebuild) with provenance kept,
-    and the next cycle re-admits the expired URLs without rebuilding."""
-    from spark_frontier.pipeline.crawl import retention_cleanup
-
+    """The bloom's two probe modes give the identical links key set (the
+    probe never decides). Retention rebuilds the bloom ONCE, in the shape
+    the next cycle reuses: that cycle re-admits the expired URLs without
+    another build, and the cycle after catches up from the links delta
+    and re-crawls nothing (a catch-up false negative would leak
+    duplicates into links)."""
     stores = {}
-    for mode, probe in (("bloom", "broadcast"), ("cuckoo", "broadcast"),
-                        ("cuckoo-dist", "distributed")):
+    for probe in ("broadcast", "distributed"):
         st = _fresh_store(tmp_path_factory)
         seed_seen_store(st, world["url_seen"])
-        run_crawl_cycle(
-            spark, world, st, batch_ts=NOW, days=7,
-            seen_filter=mode.split("-")[0], bloom_probe=probe,
-        )
-        stores[mode] = st
-    a = sorted(r["url_key"] for r in
-               stores["bloom"].table("links").read(spark)
-               .select("url_key").collect())
-    b = sorted(r["url_key"] for r in
-               stores["cuckoo"].table("links").read(spark)
-               .select("url_key").collect())
-    assert a == b
-    # round-5: the distributed (cogroup) cuckoo probe is cycle-identical
-    # to the broadcast probe and to the bloom path
-    c = sorted(r["url_key"] for r in
-               stores["cuckoo-dist"].table("links").read(spark)
-               .select("url_key").collect())
-    assert a == c
-    stores["cuckoo"] = stores["cuckoo-dist"]  # reuse the dist store below
+        run_crawl_cycle(spark, world, st, batch_ts=NOW, days=7,
+                        bloom_probe=probe)
+        stores[probe] = st
 
-    st = stores["cuckoo"]
-    cuckoo = st.table("cuckoo")
-    assert cuckoo.exists()
-    meta0 = cuckoo.summary()
-    # round 5: cycle ends no longer commit a delta (the commit tail);
-    # the filter lags links and is caught up at next-cycle init
-    assert meta0["op"] == "cuckoo_build"
-    links_hist = [h["snapshot_id"] for h in st.table("links").history()]
-    assert meta0["covers_links"] in links_hist  # ancestor of HEAD
+    def _keys(st):
+        return sorted(r["url_key"] for r in
+                      st.table("links").read(spark).select("url_key")
+                      .collect())
 
+    assert _keys(stores["broadcast"]) == _keys(stores["distributed"])
+
+    st = stores["distributed"]
+    bloom = st.table("bloom")
+    assert bloom.summary()["op"] == "bloom_build"
     n_before = st.table("links").read(spark).count()
     retention_cleanup(st, spark, now=NOW, ttl_days=2)
     n_after = st.table("links").read(spark).count()
     assert n_after < n_before
-    meta1 = cuckoo.summary()
-    assert meta1["op"] == "cuckoo_delete_after_retention"  # NOT a rebuild
-    assert meta1["covers_links"] == st.table("links").snapshot_id
-    # retention folds the uncovered delta in, then deletes: the filter
-    # now holds exactly one key per surviving link row
-    assert meta1["n_keys"] == n_after
+    meta = bloom.summary()
+    assert meta["op"] == "bloom_rebuild_after_retention"
+    assert meta["covers_links"] == st.table("links").snapshot_id
+    assert meta["n_segments"] == 16 and meta["m_bits"]
+    retention_sid = bloom.snapshot_id
 
-    # next cycle: provenance is current → filter reused as-is, and the
-    # expired URLs re-admit (the T10 quirk) through the cuckoo path
-    rep = run_crawl_cycle(
-        spark, world, st, batch_ts=NOW, days=7, seen_filter="cuckoo"
-    )
+    # next cycle: the retention bloom is current → reused, NOT rebuilt,
+    # and the expired URLs re-admit (the T10 quirk)
+    run_crawl_cycle(spark, world, st, batch_ts=NOW, days=7)
+    assert bloom.snapshot_id == retention_sid
     n_readmit = st.table("links").read(spark).count()
     assert n_readmit > n_after
-    assert cuckoo.summary()["op"] == "cuckoo_delete_after_retention"
 
-    # cycle after that: the filter lags by the re-admitted keys → init
-    # catch-up folds them in-place (no rebuild), and NOTHING re-crawls
-    # (a catch-up false negative would leak duplicates into links)
-    run_crawl_cycle(
-        spark, world, st, batch_ts=NOW, days=7, seen_filter="cuckoo"
-    )
-    assert cuckoo.summary()["op"] == "cuckoo_catchup"
-    assert cuckoo.summary()["covers_links"] in [
-        h["snapshot_id"] for h in st.table("links").history()
+    # cycle after that: the bloom lags by the re-admitted keys → init
+    # catch-up extends it (no rebuild), and NOTHING re-crawls
+    run_crawl_cycle(spark, world, st, batch_ts=NOW, days=7)
+    hist = [h["summary"].get("op") for h in bloom.history()]
+    assert hist[hist.index("bloom_rebuild_after_retention") + 1:] == [
+        "bloom_catchup"
     ]
     assert st.table("links").read(spark).count() == n_readmit
 
@@ -424,3 +401,26 @@ def test_first_per_key_matches_window(spark):
     assert got.exceptAll(expected).count() == 0
     assert expected.exceptAll(got).count() == 0
     assert got.count() == 5
+
+
+def test_malformed_tasks_per_core_env_falls_back(spark, world, monkeypatch):
+    """A malformed tasks-per-core knob falls back to 1 task per core
+    instead of raising ValueError out of sitemap expansion or the salted
+    repartition."""
+    from spark_frontier.frontier.priority import salted_repartition
+    from spark_frontier.sitemap.expand import expand_sitemap_tree
+
+    monkeypatch.setenv("SPARK_FRONTIER_PARSE_TASKS_PER_CORE", "two")
+    monkeypatch.setenv("SPARK_FRONTIER_TASKS_PER_CORE", "")
+    sites = world["sites"].filter(F.col("is_active"))
+    entries = expand_sitemap_tree(
+        sites.select("site_id", "site_seq", "sitemap_url"),
+        world["sitemap_pages"],
+    )
+    assert entries.count() > 0
+    salted = salted_repartition(
+        entries.select(F.col("loc").alias("url"),
+                       F.lit("h").alias("host")), 4
+    )
+    assert salted.rdd.getNumPartitions() == \
+        spark.sparkContext.defaultParallelism
