@@ -60,7 +60,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("spark-frontier-corpus").getOrCreate()
+    from spark_frontier.session import worker_daemon_conf
+
+    # Python workers fork from the package's daemon (worker_daemon.py)
+    spark = (
+        SparkSession.builder.appName("spark-frontier-corpus")
+        .config(map=worker_daemon_conf())
+        .getOrCreate()
+    )
 
     from spark_frontier.pipeline.corpus import run_corpus_filter
 

@@ -58,8 +58,15 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    # spark-submit provides master/deploy config; fall back to local dev
-    spark = SparkSession.builder.appName("spark-frontier-crawl").getOrCreate()
+    from spark_frontier.session import worker_daemon_conf
+
+    # spark-submit provides master/deploy config; fall back to local dev.
+    # Python workers fork from the package's daemon (worker_daemon.py).
+    spark = (
+        SparkSession.builder.appName("spark-frontier-crawl")
+        .config(map=worker_daemon_conf())
+        .getOrCreate()
+    )
 
     from spark_frontier.pipeline.crawl import (
         load_world,

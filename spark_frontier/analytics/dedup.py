@@ -962,6 +962,11 @@ def dedup_clusters(
     # ~threshold × 16 B in its own job before every large-graph run).
     # The driver branch still collects — but only after the gate says the
     # rows fit, and that collect replaces the old gate collect 1:1.
+    # Observation.get blocks until an action has run the observed plan,
+    # and counts every execution of it: this relies on materialize being
+    # an EAGER checkpoint that executes the plan exactly once (a lazy one
+    # would hang here; a recomputing checkpoint write, as on Spark 3.x,
+    # would double n and halve the effective threshold).
     obs_e = _Obs()
     edges = (
         ea.unionByName(eb)

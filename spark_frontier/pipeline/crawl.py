@@ -152,6 +152,13 @@ def first_per_key(candidates: DataFrame) -> DataFrame:
     full per-partition sort of the candidate rows after the exchange
     (~25% of the job on the bench world, where duplicates are rare).
     Exactness is pinned by test_first_per_key_matches_window.
+
+    Two conditions hold this up. Every candidate column rides in the
+    struct, so every one must be orderable: a map-typed column would
+    fail analysis (the window ordered only the 4 priority columns).
+    And equality with the window rests on the order prefix being
+    globally unique: on a prefix tie the payload fields (nulls first)
+    would pick the winner, where the window picks arbitrarily.
     """
     cols = candidates.columns
     order = ["site_seq", "depth", "path", "sitemap_pos"]

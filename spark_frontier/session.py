@@ -13,6 +13,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# spark.python.daemon.module for every session this package builds: see
+# worker_daemon.py (saves ~0.3-0.7 s of pyspark.zip re-parsing per task)
+WORKER_DAEMON_MODULE = "spark_frontier.worker_daemon"
+
+
+def worker_daemon_conf() -> dict[str, str]:
+    """Conf that forks Python workers from ``WORKER_DAEMON_MODULE``.
+
+    The daemon is imported before a task puts ``--py-files`` on
+    ``sys.path``, so the directory or archive this package was loaded
+    from goes on the workers' PYTHONPATH too, replacing any
+    ``spark.executorEnv.PYTHONPATH`` set elsewhere. That path is the
+    driver's: it serves local mode; cluster executors need the package
+    installed or on their PYTHONPATH (YARN puts ``--py-files`` there).
+    """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return {
+        "spark.python.daemon.module": WORKER_DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": root,
+    }
+
 
 def tasks_per_core(env_var: str) -> int:
     """A tasks-per-core slack knob read from ``env_var``: a positive int,
@@ -62,8 +83,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # python workers dominate this engine's hot path — keep them alive
-        # across tasks/stages instead of forking+importing numpy per task
+        # across tasks/stages instead of forking+importing numpy per task,
+        # and fork them from a daemon that makes the per-task import-cache
+        # flush a stat instead of a pyspark.zip re-parse (worker_daemon.py)
         .config("spark.python.worker.reuse", "true")
+        .config(map=worker_daemon_conf())
         # small-file worlds: split parquet scans finer than the 128m default
         # so a single-file table doesn't serialize its scan stage. 2m (not
         # round-2's 16m): a 10 MB zstd table at 16m was ONE scan task that

@@ -144,6 +144,51 @@ def test_host_state_deferred_fold_parity(spark, world, tmp_path_factory):
     assert base.exceptAll(stale).count() == 0
 
 
+def test_host_state_broadcast_path_matches_literal(
+    spark, world, tmp_path_factory, monkeypatch
+):
+    """Both sides of _HS_LITERAL_CAP: with the cap at 0, waves ≥ 2 take
+    the broadcast-join host-state path (blocked-host anti-join, deadline
+    join) instead of inlining the rows as literals — same links, same
+    host state."""
+    from spark_frontier.pipeline import crawl
+    from spark_frontier.politeness.backoff import read_host_state
+
+    def cycle():
+        store = _fresh_store(tmp_path_factory)
+        seed_seen_store(store, world["url_seen"])
+        report = run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7,
+                                 max_per_host=8)
+        assert report.waves > 1
+        counters = {k: v for k, v in report.__dict__.items() if k != "extra"}
+        hs = read_host_state(store.table("host_state"), spark)
+        return counters, store.table("links").read(spark), hs
+
+    lit_report, lit_links, lit_hs = cycle()
+
+    broadcast_waves = []
+    real_blocked_hosts = crawl.blocked_hosts
+
+    def spy_blocked_hosts(hs):
+        broadcast_waves.append(hs)
+        return real_blocked_hosts(hs)
+
+    monkeypatch.setattr(crawl, "_HS_LITERAL_CAP", 0)
+    monkeypatch.setattr(crawl, "blocked_hosts", spy_blocked_hosts)
+    bc_report, bc_links, bc_hs = cycle()
+
+    # wave 1 starts from an empty host state (literal either way); every
+    # later wave ran the broadcast path
+    assert len(broadcast_waves) == bc_report["waves"] - 1
+    assert bc_report == lit_report
+    assert lit_links.count() == bc_links.count()
+    assert lit_links.exceptAll(bc_links).count() == 0
+    assert bc_links.exceptAll(lit_links).count() == 0
+    assert lit_hs.count() == bc_hs.count() > 0
+    assert lit_hs.exceptAll(bc_hs).count() == 0
+    assert bc_hs.exceptAll(lit_hs).count() == 0
+
+
 def test_resume_equals_uninterrupted(spark, world, tmp_path_factory):
     full = _fresh_store(tmp_path_factory)
     seed_seen_store(full, world["url_seen"])
