@@ -302,12 +302,6 @@ def quality_gate(stats: DataFrame, min_side: int = 64,
     )
 
 
-def decode_audio(blob: bytes) -> np.ndarray:  # pragma: no cover - seam
-    """STUB: audio decode seam. Real deployments plug soundfile/ffmpeg here;
-    the container ships neither."""
-    raise NotImplementedError("audio decode requires ffmpeg/soundfile")
-
-
 def frame_sample(video_blob: bytes, n_frames: int) -> list[bytes]:  # pragma: no cover
     """STUB: video frame sampling seam (evenly spaced frame extraction).
     Real deployments plug pyav/ffmpeg here."""

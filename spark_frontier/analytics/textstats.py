@@ -50,12 +50,6 @@ def punct_ratio(col) -> F.Column:
     return n_punct / F.greatest(F.length(col), F.lit(1))
 
 
-def stopword_ratio(col, lang: str = "en") -> F.Column:
-    toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 _LANGS = sorted(STOPWORDS)  # de, en, es, fr — tie-break order
 
 

@@ -165,31 +165,6 @@ def detect_py(url: str, title: str, content: str,
     return "sports"
 
 
-def detect_category(
-    url: Column,
-    title: Column,
-    content: Column,
-    site_type: Column,
-    sport_focus: Column,
-) -> Column:
-    """Vectorized category detection (Arrow batches). TEST ORACLE ONLY —
-    the pipeline path is the all-JVM ``with_category`` below."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def _detect(urls: pd.Series, titles: pd.Series, contents: pd.Series,
-                stypes: pd.Series, focuses: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                detect_py(u or "", t, c, st, sf)
-                for u, t, c, st, sf in zip(urls, titles, contents, stypes, focuses)
-            ]
-        )
-
-    return _detect(url, title, content, site_type, sport_focus)
-
-
 # ---------------------------------------------------------------------------
 # All-JVM precedence chain (the pipeline hot path — no Python per row)
 

@@ -17,9 +17,6 @@ from __future__ import annotations
 import html as _htmllib
 import re
 
-import pandas as pd
-from pyspark.sql import Column
-
 MIN_CONTENT_LENGTH = 100  # validator.py:23
 
 TITLE_SELECTORS = ["h1", "article h1", ".headline", ".article-title",
@@ -243,33 +240,3 @@ def validate_article_html(url_ok: bool, html: str) -> tuple[bool, str | None]:
     if len(extract_content(html)) < MIN_CONTENT_LENGTH:
         return False, "Content too short"
     return True, None
-
-
-def extract_article_struct(html_col: Column) -> Column:
-    """V2-V5 as one vectorized UDF → struct(title, author, publish_date,
-    content)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("title", StringType()),
-            StructField("author", StringType()),
-            StructField("publish_date", StringType()),
-            StructField("content", StringType()),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _extract(htmls: pd.Series) -> pd.DataFrame:
-        rows = []
-        for h in htmls:
-            h = h or ""
-            rows.append(
-                (extract_title(h), extract_author(h), extract_date_iso(h),
-                 extract_content(h))
-            )
-        return pd.DataFrame(rows, columns=["title", "author", "publish_date",
-                                           "content"])
-
-    return _extract(html_col)

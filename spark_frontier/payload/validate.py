@@ -60,34 +60,6 @@ def _ref_pixels(seed: int, w: int, h: int) -> np.ndarray:
     return ref
 
 
-def _validate_one(image_id, data, w, h, fmt, caption, ref_caption) -> tuple:
-    """Single-row reference implementation (kept as the test oracle for the
-    vectorized batch path below)."""
-    if caption is None or (isinstance(caption, str) and not caption.strip()):
-        return False, "missing caption", None
-    if ref_caption is not None and caption != ref_caption:
-        return False, "caption mismatch", None
-    if fmt not in KNOWN_FMTS:
-        return False, f"unknown format {fmt}", None
-    try:
-        pixels = decode_image(data)
-    except (ValueError, Exception) as e:  # zlib errors etc.
-        return False, f"decode failed: {e}", None
-    if pixels.shape[0] != h or pixels.shape[1] != w:
-        return False, "dimension mismatch", None
-    ref = _ref_pixels(seed_of_image_id(image_id), int(w), int(h))
-    d = pixels.ravel().astype(np.int16)
-    d -= ref
-    sse = int(np.einsum("i,i->", d, d, dtype=np.int64))
-    p = _psnr_from_sse(sse, d.size)
-    if fmt in LOSSY_FMTS:
-        if p < PSNR_MIN_DB:
-            return False, f"psnr {p:.1f} < {PSNR_MIN_DB}", p
-    elif sse != 0:  # lossless: SSE==0 ⟺ np.array_equal
-        return False, "lossless pixels differ", p
-    return True, None, p
-
-
 def _psnr_from_sse(sse: int, n: int) -> float:
     if sse == 0:
         return float("inf")

@@ -33,15 +33,8 @@ from spark_frontier.politeness.ratelimit import (  # noqa: E402
     RATE_LIMIT_COOLDOWN_S,
 )
 
-HOST_STATE_COLS = [
-    "host",
-    "refill_rate",
-    "rate_limit_until",
-    "last_fetch_ts",
-    "consecutive_failures",
-    "recent_codes",
-    "is_blocked",
-]
+# snapshot-summary key of a deferred fold (SnapStore GC pins its files)
+_PENDING = "pending_fold"
 
 
 def empty_host_state(spark) -> DataFrame:
@@ -53,15 +46,28 @@ def empty_host_state(spark) -> DataFrame:
     )
 
 
+def deferred_fold_summary(files: list[str], batch_ts: datetime,
+                          **summary) -> dict:
+    """A host-state commit summary that DEFERS folding one fetch batch:
+    ``files`` hold its (host, politeness_deadline, http_code) rows. The
+    crawl cycle defers its final wave's fold this way, because at cycle
+    end there is no compute left to hide the groupBy-host job behind;
+    ``read_host_state`` applies it."""
+    return {**summary, _PENDING: {"files": list(files),
+                                  "batch_ts": batch_ts.isoformat()}}
+
+
+def has_pending_fold(table) -> bool:
+    """Whether the table's current snapshot carries a deferred fold."""
+    return bool((table.summary() or {}).get(_PENDING))
+
+
 def read_host_state(table, spark) -> DataFrame | None:
-    """Read a persisted host-state SnapTable, applying any DEFERRED
-    final-wave fold the crawl cycle recorded (``pending_fold`` in the
-    snapshot summary: the lineage files of the cycle's last fetch wave
-    plus its batch_ts). The cycle defers that fold because at cycle end
-    there is no compute left to hide the ~2 s groupBy-host job behind —
-    the NEXT cycle folds it on the init thread, overlapped with sitemap
-    discovery; external readers (reporting, the streaming topology) get
-    the same folded view through this helper.
+    """Read a persisted host-state SnapTable, applying any DEFERRED fold
+    its current snapshot records (``deferred_fold_summary``). The next
+    crawl cycle folds it at init, overlapped with sitemap discovery;
+    external readers (reporting, the streaming topology) get the same
+    folded view through this helper.
 
     If the fold's lineage files are unreadable (retention rewrite,
     manual cleanup) the stale base is returned: stale politeness state
@@ -70,7 +76,7 @@ def read_host_state(table, spark) -> DataFrame | None:
     pending fold.
     """
     hs = table.read(spark)
-    pend = (table.summary() or {}).get("pending_fold")
+    pend = (table.summary() or {}).get(_PENDING)
     if not pend:
         return hs
     base = hs if hs is not None else empty_host_state(spark)

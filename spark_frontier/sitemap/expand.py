@@ -178,9 +178,3 @@ def _empty_entries(spark) -> DataFrame:
         ]
     )
     return spark.createDataFrame([], schema)
-
-
-def entry_order_key_cols() -> list:
-    """The columns that, ordered ascending, reproduce the reference's
-    per-site entry collection order (BFS levels, then path, then doc pos)."""
-    return [F.col("depth"), F.col("path"), F.col("sitemap_pos")]

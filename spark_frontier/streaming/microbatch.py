@@ -7,16 +7,18 @@ time ranges, and every saved article firing a webhook / Redis queue push
 (/root/reference/src/pipeline/trigger.py:29-116).
 
 Spark shape: frontier *candidates* (parsed sitemap url-rows) arrive as a
-file stream; each micro-batch runs the dedup → politeness → fetch →
-validate → append tail through ``foreachBatch`` (the sinks are
-table-commit-shaped, so foreachBatch is the correct sink primitive — the
-same pattern drives streaming MERGE on Iceberg).
+file stream; each micro-batch runs the batch cycle's own stages —
+``frontier`` (recency → candidates → robots → within-batch dedupe) and
+one ``plan_wave`` (dedup → politeness → fetch → validate → categorize) —
+then appends, through ``foreachBatch`` (the sinks are table-commit-shaped,
+so foreachBatch is the correct sink primitive — the same pattern drives
+streaming MERGE on Iceberg).
 
 RECENCY: a ``withWatermark`` on the source would be a NO-OP here —
 watermarks only drop rows at *stateful* operators, and this query is
 stateless foreachBatch. F2's cutoff parity is therefore an EXPLICIT filter
-inside the micro-batch (``filter_recent`` — the same operator the batch
-cycle uses), against ``batch_ts - days``.
+inside the micro-batch (``frontier``'s ``filter_recent``, as in the batch
+cycle), against ``batch_ts - days``.
 
 SINK INVARIANT (same as the batch cycle): each micro-batch is exactly
 deduped against the committed seen set before fetching, so every valid row
@@ -45,20 +47,22 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_frontier.frontier.priority import build_candidates
-from spark_frontier.frontier.recency import filter_recent
 from spark_frontier.functions.bloom import (
     bloom_usable,
-    dedup_unseen,
     extend_bloom,
     rebuild_bloom,
 )
 from spark_frontier.pipeline.crawl import (
-    build_link_rows,
-    fetch_and_validate,
+    LINK_COLUMNS,
+    SeenIndex,
+    frontier,
+    observed_count,
+    plan_wave,
 )
-from spark_frontier.politeness.backoff import blocked_hosts, empty_host_state
-from spark_frontier.politeness.ratelimit import assign_deadlines
+from spark_frontier.politeness.backoff import (
+    empty_host_state,
+    read_host_state,
+)
 from spark_frontier.storage import SnapStore
 from spark_frontier.storage.materialize import materialize
 
@@ -207,21 +211,12 @@ def start_stream_crawl(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # F2 recency parity — EXPLICIT filter (see module docstring)
-        recent = filter_recent(batch_df, sites, days=days, now=batch_ts)
-        candidates = build_candidates(recent)
-        # ROBOTS GATE — stream==batch parity: the reference checks robots
-        # before EVERY article fetch (http_client.py:129-133) regardless of
-        # entry point; round 2's streaming path skipped it entirely.
-        if "robots_docs" in world:
-            from spark_frontier.politeness.robots import (
-                build_rules_df_distributed,
-                robots_allowed,
-            )
-
-            candidates = robots_allowed(
-                candidates, build_rules_df_distributed(world["robots_docs"])
-            ).filter(F.col("robots_allowed"))
+        # the batch cycle's frontier, per micro-batch: the F2 recency
+        # filter (EXPLICIT, see module docstring), the robots gate (the
+        # reference checks robots before EVERY article fetch,
+        # http_client.py:129-133, regardless of entry point) and the
+        # within-batch dedupe
+        candidates, _ = frontier(world, batch_df, sites, batch_ts, days=days)
         links_tbl = store.table("links")
         seen = links_tbl.read(spark)
         if seen is None:
@@ -238,31 +233,18 @@ def start_stream_crawl(
             bloom_usable(meta) and meta.get("covers_links") == links_prev_sid
         ):
             segments = None
-        unseen = dedup_unseen(
-            candidates, seen.select("url_key"), segments=segments,
-            n_segments=int(meta.get("n_segments") or 32),
-        )
-        host_tbl = store.table("host_state")
-        from spark_frontier.politeness.backoff import read_host_state
-
+        seen_index = SeenIndex(seen.select("url_key"),
+                               int(meta.get("n_segments") or 32), segments)
         # pending-fold-aware: a batch cycle may have deferred its final
         # wave's fold; the stream must start from the folded view
-        hs = read_host_state(host_tbl, spark) or empty_host_state(spark)
-        unseen = unseen.join(
-            F.broadcast(blocked_hosts(hs)), on="host", how="left_anti"
-        )
-        wave = assign_deadlines(unseen, hs, batch_ts, max_per_host=max_per_host)
-        rows_full = build_link_rows(
-            fetch_and_validate(wave, world, batch_ts),
-            batch_ts,
-            sites=sites,
-            keep=["politeness_deadline"],
-        ).transform(materialize)
-        n = rows_full.count()
+        hs = (read_host_state(store.table("host_state"), spark)
+              or empty_host_state(spark))
+        rows, _, obs_wave = plan_wave(world, candidates, seen_index, hs,
+                                      batch_ts, max_per_host)
+        rows_full = rows.transform(materialize)
+        n = observed_count(obs_wave, "n")
         if n == 0:
             return
-        from spark_frontier.pipeline.crawl import LINK_COLUMNS
-
         valid_rows = rows_full.filter(F.col("is_valid")).select(*LINK_COLUMNS)
         # dedup-before-fetch ⇒ every valid key is new ⇒ APPEND, not MERGE
         links_tbl.append(
@@ -277,8 +259,6 @@ def start_stream_crawl(
         # the fetch pipeline). processAllAvailable blocks until the
         # companion query merged the update rows — the next micro-batch
         # gates on state through THIS batch, same as the old inline fold.
-        import os as _os
-
         rows_full.select("host", "politeness_deadline", "http_code").write.mode(
             "overwrite"
         ).parquet(_os.path.join(results_dir, f"batch_{int(batch_id)}"))

@@ -351,20 +351,34 @@ def test_links_append_failure_aborts_watermark(spark, world, tmp_path_factory,
 
 
 def test_bloom_probe_parity_and_retention_catchup(
-    spark, world, tmp_path_factory
+    spark, world, tmp_path_factory, monkeypatch
 ):
-    """The bloom's two probe modes give the identical links key set (the
-    probe never decides). Retention rebuilds the bloom ONCE, in the shape
-    the next cycle reuses: that cycle re-admits the expired URLs without
-    another build, and the cycle after catches up from the links delta
-    and re-crawls nothing (a catch-up false negative would leak
-    duplicates into links)."""
+    """Both sides of BROADCAST_SEEN_CAP: above it the cycle probes the
+    bloom by cogroup (the distributed probe), and the links key set is
+    identical (the probe never decides). Retention rebuilds the bloom
+    ONCE, in the shape the next cycle reuses: that cycle re-admits the
+    expired URLs without another build, and the cycle after catches up
+    from the links delta and re-crawls nothing (a catch-up false negative
+    would leak duplicates into links)."""
+    from spark_frontier.functions import bloom
+
+    real_probe = bloom.probe_distributed
+    distributed_calls = []
+
+    def spy_probe(*a, **k):
+        distributed_calls.append(1)
+        return real_probe(*a, **k)
+
+    monkeypatch.setattr(bloom, "probe_distributed", spy_probe)
     stores = {}
     for probe in ("broadcast", "distributed"):
         st = _fresh_store(tmp_path_factory)
         seed_seen_store(st, world["url_seen"])
-        run_crawl_cycle(spark, world, st, batch_ts=NOW, days=7,
-                        bloom_probe=probe)
+        with monkeypatch.context() as m:
+            if probe == "distributed":
+                m.setattr(bloom, "BROADCAST_SEEN_CAP", 0)
+            run_crawl_cycle(spark, world, st, batch_ts=NOW, days=7)
+        assert bool(distributed_calls) == (probe == "distributed")
         stores[probe] = st
 
     def _keys(st):
@@ -469,3 +483,149 @@ def test_malformed_tasks_per_core_env_falls_back(spark, world, monkeypatch):
     )
     assert salted.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism
+
+
+def test_funnel_metrics_equal_direct_counts(spark, world, tmp_path_factory):
+    """collect_metrics counts the sitemap entries and the robots denials
+    with Observations on the candidates job; on a world where robots.txt
+    denies two hosts outright, both equal the directly computed counts."""
+    from spark_frontier.frontier.priority import build_candidates
+    from spark_frontier.frontier.recency import filter_recent
+    from spark_frontier.politeness.robots import (
+        build_rules_df_distributed,
+        robots_allowed,
+    )
+    from spark_frontier.sitemap.expand import expand_sitemap_tree
+
+    denied = ["site2.example.com", "site4.example.com"]
+    w = dict(world)
+    w["robots_docs"] = world["robots_docs"].filter(
+        ~F.col("host").isin(denied)
+    ).unionByName(spark.createDataFrame(
+        [(h, "User-agent: *\nDisallow: /\n") for h in denied],
+        "host string, content string",
+    ))
+    store = _fresh_store(tmp_path_factory)
+    seed_seen_store(store, w["url_seen"])
+    report = run_crawl_cycle(spark, w, store, batch_ts=NOW, days=7)
+
+    sites = w["sites"].filter(F.col("is_active"))
+    entries = expand_sitemap_tree(
+        sites.select("site_id", "site_seq", "sitemap_url"),
+        w["sitemap_pages"],
+    )
+    with_robots = robots_allowed(
+        build_candidates(filter_recent(entries, sites, days=7, now=NOW)),
+        build_rules_df_distributed(w["robots_docs"]),
+    )
+    n_denied = with_robots.filter(~F.col("robots_allowed")).count()
+    assert n_denied > 0
+    assert report.robots_denied == n_denied
+    assert report.sitemap_entries_total == entries.count()
+
+
+def test_lost_wave_observation_raises(spark, world, tmp_path_factory,
+                                      monkeypatch):
+    """An Observation that fails for any reason but AQE's pruned-empty
+    case makes the cycle raise — it is never read as a drained wave."""
+    from pyspark.sql import Observation
+
+    real_get = Observation.get
+
+    def get(self):
+        if self._name.startswith("valid_w"):
+            raise RuntimeError("observation lost")
+        return real_get.fget(self)
+
+    monkeypatch.setattr(Observation, "get", property(get))
+    store = _fresh_store(tmp_path_factory)
+    seed_seen_store(store, world["url_seen"])
+    with pytest.raises(RuntimeError, match="observation lost"):
+        run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+
+
+def test_fully_seen_world_reports_zeros(spark, tmp_path_factory):
+    """When every candidate is already seen, AQE prunes the unseen
+    count's CollectMetrics node (its observed row is empty): that case,
+    and only that one, reads as 0, and the cycle reports an empty wave."""
+    d = str(tmp_path_factory.mktemp("seenworld"))
+    gen_world(d, n_sites=4, urlsets_per_site=2, urls_per_urlset=15,
+              seen_frac=1.0)
+    world = load_world(spark, d)
+    store = _fresh_store(tmp_path_factory)
+    seed_seen_store(store, world["url_seen"])
+    report = run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+    assert report.entries_within_days > 0
+    assert (report.new_urls_found, report.scheduled, report.saved,
+            report.waves) == (0, 0, 0, 0)
+
+
+def test_commit_lanes_fifo_within_lane_concurrent_across():
+    """FIFO within a lane (later jobs sleep less, so only the lane chain
+    keeps them in order); two lanes run at once (one job waits for the
+    other's)."""
+    import threading
+    import time
+
+    from spark_frontier.pipeline.crawl import _CommitLanes
+
+    order = []
+    other_ran = threading.Event()
+
+    def wait_for_other():
+        if not other_ran.wait(10):
+            raise TimeoutError("lanes did not run concurrently")
+
+    lanes = _CommitLanes()
+    lanes.submit("b", wait_for_other)
+    lanes.submit("c", other_ran.set)
+    for i in range(6):
+        lanes.submit("a", lambda i=i: (time.sleep(0.01 * (6 - i)),
+                                       order.append(i)))
+    lanes.drain()
+    assert order == list(range(6))
+
+
+def test_commit_lanes_failure_poisons_own_lane_and_drain_waits():
+    """A failed job poisons the later jobs of its own lane only; drain()
+    re-raises the first error only after every job has finished,
+    including a job that a running job submitted."""
+    import time
+
+    from spark_frontier.pipeline.crawl import _CommitLanes
+
+    ran = []
+    lanes = _CommitLanes()
+
+    def fail():
+        raise ValueError("first")
+
+    def spawn():
+        time.sleep(0.2)
+        lanes.submit("c", lambda: (time.sleep(0.3), ran.append("child")))
+        ran.append("b")
+
+    lanes.submit("a", fail)
+    lanes.submit("a", ran.append, "a2")  # poisoned by the failure
+    lanes.submit("b", spawn)
+    lanes.submit("d", lambda: (_ for _ in ()).throw(KeyError("second")))
+    with pytest.raises(ValueError, match="first"):
+        lanes.drain()
+    assert ran == ["b", "child"]
+
+    # a job submitted by a running job is drained, and its error raised
+    lanes = _CommitLanes()
+
+    def spawn_failing():
+        time.sleep(0.1)
+        lanes.submit("c", fail)
+
+    lanes.submit("b", spawn_failing)
+    with pytest.raises(ValueError, match="first"):
+        lanes.drain()
+
+    # as a context manager the block's own error wins over a lane error
+    with pytest.raises(KeyError, match="cycle"):
+        with _CommitLanes() as lanes:
+            lanes.submit("a", fail)
+            raise KeyError("cycle")

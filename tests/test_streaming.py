@@ -168,6 +168,54 @@ def test_stream_robots_gate_matches_batch(spark, world_dir, tmp_path_factory):
     assert meta.get("n_segments")
 
 
+def test_stream_duplicate_candidates_enter_once(spark, world_dir,
+                                                tmp_path_factory):
+    """The same URLs listed twice in ONE micro-batch enter the frontier
+    once: the stream runs the batch cycle's within-cycle dedupe, so the
+    links table holds one row per url_key, and the same keys as the batch
+    cycle. The second listing shifts sitemap_pos, so the two copies differ
+    in their order columns the way two sitemaps listing one URL do."""
+    from spark_frontier.frontier.recency import filter_recent
+
+    world = load_world(spark, world_dir)
+    batch_store = SnapStore(str(tmp_path_factory.mktemp("dup_bstore")))
+    seed_seen_store(batch_store, world["url_seen"])
+    run_crawl_cycle(spark, world, batch_store, batch_ts=NOW, days=7,
+                    max_per_host=10_000)
+
+    sites = world["sites"].filter(F.col("is_active")).orderBy("site_seq")
+    entries = expand_sitemap_tree(
+        sites.select("site_id", "site_seq", "sitemap_url"),
+        world["sitemap_pages"],
+    )
+    cols = [f.split(" ")[0] for f in CANDIDATE_DDL.split(", ")]
+    recent = filter_recent(entries, sites, days=7, now=NOW).selectExpr(*cols)
+    cand_dir = str(tmp_path_factory.mktemp("dup_cand"))
+    recent.coalesce(1).write.mode("overwrite").parquet(cand_dir)
+    recent.withColumn(
+        "sitemap_pos", F.col("sitemap_pos") + 1_000_000
+    ).coalesce(1).write.mode("append").parquet(cand_dir)  # same batch
+
+    stream_store = SnapStore(str(tmp_path_factory.mktemp("dup_sstore")))
+    seed_seen_store(stream_store, world["url_seen"])
+    q = start_stream_crawl(
+        spark, cand_dir, world, stream_store,
+        str(tmp_path_factory.mktemp("dup_ckpt")), batch_ts=NOW,
+        max_per_host=10_000, available_now=True,
+    )
+    q.awaitTermination(300)
+
+    links = stream_store.table("links").read(spark)
+    assert links.count() == links.select("url_key").distinct().count()
+
+    def _keys(st):
+        return sorted(r["url_key"] for r in
+                      st.table("links").read(spark).select("url_key")
+                      .collect())
+
+    assert _keys(stream_store) == _keys(batch_store)
+
+
 def test_stream_k5_executor_push(spark, world_dir, tmp_path_factory):
     """K5 executor-side variant: foreachPartition pushes notifications from
     the executors — same rows as the saved set, no driver collect; a
