@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from spark_frontier.analytics.dedup import normalize_text
+from spark_frontier.analytics.dedup import gram_md5_60, normalize_text
 
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "with", "for", "on"],
@@ -177,17 +177,7 @@ def _winnow_batch(texts, k: int, w: int) -> list:
         gid = np.cumsum(newgrp) - 1
         codes = np.empty(len(ws), dtype=np.int64)
         codes[order] = gid
-        reps = ws[newgrp]
-        h60 = np.array(
-            [
-                int(hashlib.md5(
-                    r.tobytes().decode("utf-32-le").encode()
-                ).hexdigest()[:15], 16)
-                for r in reps
-            ],
-            dtype=np.uint64,
-        )
-        g = h60[codes]                     # occurrence hashes, doc order
+        g = gram_md5_60(ws[newgrp])[codes]  # occurrence hashes, doc order
     offs = np.concatenate(([0], np.cumsum(ng[ng > 0])))
     out, li = [], 0
     for i in range(nd):

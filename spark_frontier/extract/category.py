@@ -120,6 +120,14 @@ def detect_from_url_py(url: str) -> str | None:
     return None
 
 
+# \b{kw}\b per keyword, compiled once, in CATEGORY_KEYWORDS order (the
+# argmax tie-break is dict order)
+_KEYWORD_PATTERNS = [
+    (cat, [re.compile(r"\b" + re.escape(kw) + r"\b") for kw in kws])
+    for cat, kws in CATEGORY_KEYWORDS.items()
+]
+
+
 def score_text_py(text: str) -> str | None:
     """The counting core of detect_from_content on an ALREADY-prepared
     (concatenated+lowered) text: keyword count argmax with the
@@ -127,10 +135,10 @@ def score_text_py(text: str) -> str | None:
     by the reference implementation below and the Arrow step-3/4 kernel,
     so the two cannot drift."""
     scores: dict[str, int] = {}
-    for category, keywords in CATEGORY_KEYWORDS.items():
+    for category, patterns in _KEYWORD_PATTERNS:
         s = 0
-        for keyword in keywords:
-            s += len(re.findall(r"\b" + re.escape(keyword) + r"\b", text))
+        for pat in patterns:
+            s += len(pat.findall(text))
         if s > 0:
             scores[category] = s
     if not scores:
@@ -276,27 +284,13 @@ def _step34_kernel():
             codes, uniques = pd.factorize(
                 txts.iloc[rem], use_na_sentinel=False
             )
-            # bounded per-worker memo: score_text_py is pure and costs
-            # ~0.3 ms (230 regex counts); the same caption texts recur
-            # across every Arrow batch of a wave
-            per_uniq = []
-            for u in uniques:
-                key = u if isinstance(u, str) else ""
-                hit = _SCORE_MEMO.get(key, False)
-                if hit is False:
-                    hit = score_text_py(key)
-                    if len(_SCORE_MEMO) >= 1 << 16:
-                        _SCORE_MEMO.clear()
-                    _SCORE_MEMO[key] = hit
-                per_uniq.append(hit)
+            per_uniq = [score_text_py(u if isinstance(u, str) else "")
+                        for u in uniques]
             res = np.array(per_uniq, dtype=object)[codes]
             out[rem] = res
         return pd.Series(out, dtype=object)
 
     return _step34
-
-
-_SCORE_MEMO: dict = {}
 
 
 def content_text(title: Column, content: Column) -> Column:

@@ -753,11 +753,11 @@ def run_crawl_cycle(
                 # lineage (fetch_partition = the partition that executed
                 # the fetch, evaluated in the executing task); later reads
                 # re-read these files with column-pruned scans
+                lineage = rows.select(
+                    "*", F.spark_partition_id().alias("fetch_partition")
+                )
                 wave_files = store.table("fetch_log").append_files(
-                    rows.select(
-                        "*", F.spark_partition_id().alias("fetch_partition")
-                    ),
-                    summary={"op": "fetch_lineage", "wave": wave},
+                    lineage, summary={"op": "fetch_lineage", "wave": wave},
                 )
                 n_wave = observed_count(obs_wave, "n")
                 n_unseen = observed_count(obs_unseen, "n")
@@ -767,7 +767,9 @@ def run_crawl_cycle(
                     report.new_urls_found = n_unseen
                 if n_wave == 0:
                     break  # drained: the write produced no files to re-read
-                rows_full = spark.read.parquet(*wave_files)
+                # the written schema, so the re-read runs no footer job
+                rows_full = spark.read.schema(lineage.schema).parquet(
+                    *wave_files)
                 report.scheduled += n_wave
                 report.waves = wave
                 report.fetched += n_ok

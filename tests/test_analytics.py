@@ -74,7 +74,7 @@ def test_minhash_kernel_parity():
     A = rng.integers(1, P, size=num_perm, dtype=np.uint64)
     B = rng.integers(0, P, size=num_perm, dtype=np.uint64)
 
-    def naive(texts):
+    def naive(texts, n=n):
         out = []
         for t in texts:
             if t is None:
@@ -110,6 +110,40 @@ def test_minhash_kernel_parity():
         for _ in range(300)
     ]
     assert _minhash_batch(big, n, A, B) == naive(big)
+    # grams with 2-, 3- and 4-byte UTF-8 code points take hashlib, ASCII
+    # grams the vectorized md5; both kinds in one doc and one batch
+    wide = [
+        "ñandú café résumé über", "日本語のテキストです", "€€€€€€",
+        "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 🙂🙃😀🙂🙃😀",
+        "plain ascii, then ñ, then 日本, then 🙂, then ascii again",
+        "abcdñ", "ñ日🙂", "abcde🙂",
+    ]
+    assert _minhash_batch(wide, n, A, B) == naive(wide)
+    mixed = [
+        " ".join(rnd.choice(words + ["ñandú", "日本語", "🙂🙃", "café"],
+                            size=rnd.integers(1, 30)))
+        for _ in range(200)
+    ]
+    assert _minhash_batch(mixed, n, A, B) == naive(mixed)
+    # grams too long for one MD5 block all take hashlib
+    assert _minhash_batch(big[:40], 60, A, B) == naive(big[:40], n=60)
+
+
+def test_md5_60_rows_matches_hashlib():
+    """The vectorized one-block MD5 equals hashlib's md5-60 on random
+    bytes at every length one block holds, across chunk boundaries."""
+    import hashlib
+
+    from spark_frontier.analytics.dedup import MD5_ONE_BLOCK, md5_60_rows
+
+    rng = np.random.default_rng(3)
+    for L in [0, 1, 4, 5, 31, 32, 54, MD5_ONE_BLOCK]:
+        msgs = rng.integers(0, 256, size=(257, L), dtype=np.uint8)
+        want = [int(hashlib.md5(r.tobytes()).hexdigest()[:15], 16)
+                for r in msgs]
+        assert md5_60_rows(msgs, chunk=100).tolist() == want, L
+    with pytest.raises(ValueError):
+        md5_60_rows(np.zeros((1, MD5_ONE_BLOCK + 1), dtype=np.uint8))
 
 
 def test_minhash_lsh_recall(spark):

@@ -105,6 +105,55 @@ def test_category_content_scoring_min_confidence():
     assert detect_from_content_py("", "wicket once only") is None
 
 
+def test_score_text_compiled_matches_per_call_findall():
+    """The import-time compiled keyword patterns count exactly what the
+    per-call ``re.findall(r"\\b" + re.escape(kw) + r"\\b")`` form counts,
+    keyword by keyword, and score_text_py picks the same category."""
+    import re
+
+    from spark_frontier.extract.category import (
+        _KEYWORD_PATTERNS,
+        CATEGORY_KEYWORDS,
+        MIN_CONFIDENCE_SCORE,
+        score_text_py,
+    )
+
+    def reference(text):
+        scores = {}
+        for category, keywords in CATEGORY_KEYWORDS.items():
+            s = sum(len(re.findall(r"\b" + re.escape(kw) + r"\b", text))
+                    for kw in keywords)
+            if s > 0:
+                scores[category] = s
+        if not scores:
+            return None
+        best = max(scores, key=scores.get)
+        return best if scores[best] >= MIN_CONFIDENCE_SCORE else None
+
+    titles = ["", "Messi and Ronaldo goal striker report", "nfl nfl nfl",
+              "wicket bowler century ipl", "nfl soccer", None]
+    contents = ["", "penalty offside var corner kick", "lbw drs stumped",
+                "home run pitcher strikeout inning bullpen", None]
+    texts = [f"{t or ''} {(c or '')[:2000]}".lower()
+             for t in titles for c in contents]
+    texts += [
+        "müller's goal, ñandú striker — café penalty offside",  # non-ASCII
+        "日本 nfl 日本 touchdown 日本 quarterback",
+        "the super bowl super-bowl super  bowl superbowl",  # phrase forms
+        "hat-trick hat trick hat-tricks all-rounder all rounder",
+        "world cup world-cup champions league t20 twenty20",
+        "end zone end-zone nfl draft nfl-draft wild card",
+    ]
+    assert [c for c, _ in _KEYWORD_PATTERNS] == list(CATEGORY_KEYWORDS)
+    for text in texts:
+        for (cat, pats), kws in zip(_KEYWORD_PATTERNS,
+                                    CATEGORY_KEYWORDS.values()):
+            for pat, kw in zip(pats, kws):
+                want = re.findall(r"\b" + re.escape(kw) + r"\b", text)
+                assert pat.findall(text) == want, (cat, kw, text)
+        assert score_text_py(text) == reference(text), text
+
+
 def test_category_default_sports():
     assert detect_py("https://s.com/news/item", "hello", "world") == "sports"
 

@@ -1,6 +1,7 @@
 import json
 import os
 
+import pandas as pd
 import pytest
 
 from spark_frontier.storage import SnapStore
@@ -328,3 +329,93 @@ def test_gc_respects_shared_and_pending_references(tmp_path):
     assert sorted(removed) == sorted(
         p for p in shared_files + fold_files
     )
+
+
+def _codecs(paths) -> set:
+    """Compression codecs of every column chunk of the given files."""
+    import pyarrow.parquet as pq
+
+    out = set()
+    for p in paths:
+        meta = pq.ParquetFile(p).metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                out.add(meta.row_group(rg).column(c).compression)
+    return out
+
+
+def test_every_write_path_writes_zstd(spark, tmp_path):
+    """Each SnapStore write path — Spark appends and overwrites, the
+    rewrites behind merge/delete_where/compact, and the driver-local
+    pyarrow writes — writes only ZSTD column chunks."""
+    store = SnapStore(str(tmp_path))
+    schema = "k long, v string, h string"
+
+    def df(keys):
+        return spark.createDataFrame(
+            [(k, f"v{k}", f"{k:064x}") for k in keys], schema)
+
+    t = store.table("t")
+    t.append(df(range(0, 50)))
+    assert _codecs(t.current_files()) == {"ZSTD"}, "append"
+    files = t.append_files(df(range(50, 80)))
+    assert _codecs(files) == {"ZSTD"}, "append_files"
+    t.merge(df([3, 200]), ["k"])
+    assert _codecs(t.current_files()) == {"ZSTD"}, "merge update"
+    t.merge(df([4, 201]), ["k"], when_matched="ignore")
+    assert _codecs(t.current_files()) == {"ZSTD"}, "merge insert-only"
+    t.delete_where("k < 10", spark)
+    assert _codecs(t.current_files()) == {"ZSTD"}, "delete_where"
+    t.append(df(range(300, 310)))
+    assert t.compact(spark) is not None
+    assert _codecs(t.current_files()) == {"ZSTD"}, "compact"
+
+    o = store.table("o")
+    o.overwrite(df(range(5)))
+    assert _codecs(o.current_files()) == {"ZSTD"}, "overwrite"
+    o.overwrite(df(range(5)), small=True)
+    assert len(o.current_files()) == 1
+    assert _codecs(o.current_files()) == {"ZSTD"}, "overwrite small"
+
+    loc = store.table("loc")
+    pdf = pd.DataFrame({"k": [1, 2], "ts": pd.to_datetime(["2026-01-01"] * 2)})
+    loc.append_local(pdf)
+    assert _codecs(loc.current_files()) == {"ZSTD"}, "append_local"
+    loc.overwrite_local(pdf)
+    assert _codecs(loc.current_files()) == {"ZSTD"}, "overwrite_local"
+
+
+def test_snappy_files_read_beside_zstd(spark, tmp_path, monkeypatch):
+    """A table whose older commits are snappy (the codec before zstd)
+    reads every row next to newer zstd files; an incremental read across
+    the boundary is exactly the delta; a rewrite converts it to zstd."""
+    from spark_frontier.storage import snapstore
+
+    store = SnapStore(str(tmp_path))
+    t = store.table("t")
+    schema = "k long, v string"
+    monkeypatch.setattr(snapstore, "CODEC", "snappy")
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    t.append_local(pd.DataFrame({"k": [3], "v": ["c"]}))
+    old_files = list(t.current_files())
+    assert _codecs(old_files) == {"SNAPPY"}
+    base = t.snapshot_id
+    monkeypatch.undo()
+
+    t.append(spark.createDataFrame([(4, "d"), (5, "e")], schema))
+    t.append_local(pd.DataFrame({"k": [6], "v": ["f"]}))
+    new_files = [f for f in t.current_files() if f not in old_files]
+    assert _codecs(new_files) == {"ZSTD"}
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [
+        1, 2, 3, 4, 5, 6]
+    delta = t.read_changes(spark, base)
+    assert sorted((r["k"], r["v"]) for r in delta.collect()) == [
+        (4, "d"), (5, "e"), (6, "f")]
+
+    assert t.compact(spark, target_file_bytes=1 << 30) is not None
+    assert _codecs(t.current_files()) == {"ZSTD"}
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [
+        1, 2, 3, 4, 5, 6]
+    t.delete_where("k = 1", spark)
+    assert _codecs(t.current_files()) == {"ZSTD"}
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [2, 3, 4, 5, 6]
