@@ -11,9 +11,11 @@ n_chars):
                          exact pairwise Jaccard, pruned by a same-gram
                          pre-join so it never goes O(n²) on disjoint docs
 - minhash_lsh_pairs      MinHash signatures (vectorized numpy) → banded
-                         LSH bucket join → candidates → exact verify.
-                         The scale path: candidates ∝ true near-dups, not
-                         n². Probabilistic recall (tunable perms/bands).
+                         LSH buckets → one Arrow kernel per bucket
+                         partition verifies every same-bucket pair and
+                         emits only survivors. The scale path: work ∝
+                         bucket sizes, not n². Probabilistic recall
+                         (tunable perms/bands).
 - simhash_pairs          64-bit SimHash + chunk-banding for hamming ≤ k
 - embedding_neardup      cosine ≥ τ pairs over embeddings (block join)
 
@@ -392,6 +394,11 @@ def minhash_signatures(
     return normed.select("doc_id", _minhash(F.col("_t")).alias("signature"))
 
 
+# (band, bucket) groups above this many rows verify via chunked row
+# matrices instead of the batched (g, m, m) tensors
+_BIG = 4096
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 5,
@@ -399,96 +406,31 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     text_col: str = "text",
-    verify: str = "bucket",
 ) -> DataFrame:
     """Banded LSH: split signatures into ``bands`` rows-per-band groups,
     bucket the corpus on (band, band-hash), and verify every same-bucket
-    candidate pair with the signature Jaccard estimate. Collision prob
-    for a pair with true Jaccard s is 1-(1-s^r)^b — tune bands/num_perm
-    for the target threshold.
+    candidate pair with the signature Jaccard estimate (agreements /
+    num_perm, an exact double). Collision prob for a pair with true
+    Jaccard s is 1-(1-s^r)^b — tune bands/num_perm for the target
+    threshold.
 
-    TWO verify topologies, value-identical (same pairs, same estimate
-    doubles — est is an integer agreement count / num_perm either way),
-    chosen by the candidate-to-survivor shape of the corpus:
-
-    - ``verify='bucket'`` (default): one Arrow pass per (band, bucket)
-      partition computes all pairwise agreement counts vectorized and
-      only SURVIVING pairs leave the task. Wins when collisions vastly
-      outnumber survivors — the round-5 join shape paid one interpreted
-      JVM fold per candidate (24 M candidates → 2.6 k survivors at
-      sf1.0: ~13 s of fold for nothing; this path is 3.4× faster
-      there). Cost: the bucket shuffle carries each signature once per
-      band; a degenerate bucket still costs one task m² compares — the
-      same worst case the self-join had, at vector speed and bounded
-      memory (row-chunked).
-    - ``verify='join'``: id-only banded rows self-join on (band,
-      bucket), candidate id-pairs dedup, signatures join back, JVM fold
-      per pair. Wins when most candidates SURVIVE (dense near-dup
-      corpora: the corpus funnel measures 4.5 M survivors at 100 k docs
-      — the python emit + extra shuffle of the bucket path costs more
-      than the folds save; interleaved A/B at 2 cores: 47-55 s join vs
-      64-70 s bucket). ``pipeline/corpus.py`` passes this explicitly.
+    One Arrow pass per (band, bucket) shuffle partition computes all
+    pairwise agreement counts vectorized, and only SURVIVING pairs leave
+    the task: filter, then verify inside the partition. That fits every
+    caller's shape, where collisions outnumber survivors — 24 M
+    candidates → 2.6 k survivors for q21 at sf1.0, and the corpus
+    funnel's near-dup input is sparse too: 400 pairs on the bench
+    corpus, 31,920 on the 88,150 docs a 100 k-doc corpus keeps after the
+    repetition gate (the 4.5 M pairs of the raw corpus are its 3,000
+    near-identical spam docs, which that gate drops). Cost: the bucket
+    shuffle carries each signature once per band; a degenerate bucket
+    still costs one task m² compares, at vector speed and in bounded
+    memory (groups above ``_BIG`` rows verify in row chunks).
     """
-    if verify not in ("bucket", "join"):
-        raise ValueError(f"unknown verify: {verify!r}")
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     rows_per_band = num_perm // bands
     sigs = minhash_signatures(docs, n=n, num_perm=num_perm, text_col=text_col)
-    if verify == "join":
-        # signatures feed the banded explode AND both sides of the
-        # verify join-back — materialize once
-        sigs = sigs.transform(materialize)
-        banded_ids = sigs.select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.xxhash64(
-                        F.slice(
-                            F.col("signature"),
-                            b * rows_per_band + 1,
-                            rows_per_band,
-                        )
-                    ),
-                )
-            ).alias("band", "bucket"),
-        )
-        cand_ids = (
-            banded_ids.alias("a")
-            .join(banded_ids.alias("b"), on=["band", "bucket"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        cand = (
-            cand_ids
-            .join(
-                sigs.select(F.col("doc_id").alias("doc_a"),
-                            F.col("signature").alias("sig_a")),
-                "doc_a",
-            )
-            .join(
-                sigs.select(F.col("doc_id").alias("doc_b"),
-                            F.col("signature").alias("sig_b")),
-                "doc_b",
-            )
-        )
-        est = F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"),
-                           lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        ) / F.lit(float(num_perm))
-        return (
-            cand.withColumn("jaccard_est", est)
-            .filter(F.col("jaccard_est") >= threshold)
-            .select("doc_a", "doc_b", "jaccard_est")
-        )
     banded = sigs.select(
         "doc_id",
         "signature",
@@ -515,7 +457,8 @@ def minhash_lsh_pairs(
     ])
     thr = float(threshold)
     perm_d = float(num_perm)
-    _BIG = 4096           # groups above this verify via chunked matrices
+    # read per call: the kernel closure carries the value to the workers
+    big = _BIG
 
     def _verify_part(batches):
         # ONE Arrow table per shuffle partition (hash partitioning on
@@ -563,7 +506,7 @@ def minhash_lsh_pairs(
             m = e - s
             if m < 2:
                 continue
-            if m <= _BIG:
+            if m <= big:
                 by_size[m].append(s)
                 continue
             # degenerate hot bucket: chunked (rows × m) matrices bound

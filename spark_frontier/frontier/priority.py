@@ -1,4 +1,4 @@
-"""Frontier candidate construction, priority, and hot-host salting.
+"""Frontier candidate construction and priority.
 
 The frontier's priority contract (SURVEY.md §3): selection order is
 ``(site_seq, depth, path, sitemap_pos)`` — sites in get_active_sites()
@@ -7,13 +7,11 @@ min-heap key; we never materialize a global row_number (it would
 single-partition the sort at 10^10 rows) — every consumer orders or
 windows by the tuple directly.
 
-SALTING (north_rule "salted repartitioning of hot hosts"): UDF-heavy
-stages (fetch/validate) are partitioned by host for politeness, but one
-hot host would pin a whole wave to one task. AQE splits skewed JOINS, not
-UDF stages, so we salt explicitly: partition key =
-``concat(host, '#', pmod(xxhash64(url), n_salt))``. Politeness stays
-correct because deadlines were already assigned per-host BEFORE salting —
-the salt only spreads *execution*, not *scheduling*.
+Hot hosts never pin a UDF stage to one task: deadlines are assigned per
+host first (politeness/ratelimit.py, whose drain path interleaves salted
+sub-ranks), and the wave's fetch/validate UDFs run after the fetch join,
+whose hash partitioning on ``url`` spreads each host's rows over every
+shuffle partition.
 """
 
 from __future__ import annotations
@@ -29,7 +27,6 @@ from spark_frontier.functions.urls import (
 )
 from spark_frontier.frontier.recency import url_pattern_ok
 from spark_frontier.frontier.traps import trap_ok
-from spark_frontier.session import tasks_per_core
 
 PRIORITY_COLS = ["site_seq", "depth", "path", "sitemap_pos"]
 
@@ -58,21 +55,3 @@ def build_candidates(entries: DataFrame) -> DataFrame:
         .withColumn("host", host_of(F.col("url")))
     )
 
-
-def salted_repartition(
-    df: DataFrame, n_salt: int, num_partitions: int | None = None
-) -> DataFrame:
-    """Spread each host's rows over ``n_salt`` partitions for
-    UDF-stage parallelism. Use AFTER deadlines are assigned."""
-    salt_key = F.concat_ws(
-        "#", F.col("host"), F.pmod(F.xxhash64(F.col("url")), F.lit(n_salt))
-    )
-    if num_partitions is None:
-        # tasks-per-core granularity: >1 gives the scheduler slack to
-        # rebalance around stragglers (host noise, skewed salt buckets) at
-        # the price of a small per-task python-worker cost; tunable because
-        # the right value is workload-dependent (SPARK_FRONTIER_TASKS_PER_CORE)
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * (
-            tasks_per_core("SPARK_FRONTIER_TASKS_PER_CORE")
-        )
-    return df.repartition(num_partitions, salt_key)

@@ -151,9 +151,9 @@ def run_corpus_filter(
     batch_ts = batch_ts or datetime.now(timezone.utc)
     store = SnapStore(store_root)
     report: dict = {"batch_ts": batch_ts.isoformat()}
-    # per-stage wall clocks (driver-observed, barriers included) — the
-    # bench's corpus leg reports these so fixed-vs-parallel cost per
-    # stage is auditable, mirroring the crawl CycleReport's _tr trace
+    # per-stage wall clocks (driver-observed, barriers included):
+    # bench.py's corpus leg reports them as ``stage_walls_s`` so the
+    # fixed-vs-parallel cost of each stage is auditable
     stage_walls: dict[str, float] = {}
     report["stage_walls_s"] = stage_walls
     _last = [_time.time()]
@@ -221,14 +221,7 @@ def run_corpus_filter(
     _tick("exact_dedup")
 
     # ---- MinHash near-dup: keep one representative per cluster.
-    # verify='join': this corpus is near-dup DENSE (4.5 M surviving
-    # pairs at 100 k docs) — most bucket collisions survive, so the
-    # id-only join + JVM fold beats the bucket-kernel path, which wins
-    # only when collisions vastly outnumber survivors (see
-    # minhash_lsh_pairs; interleaved 2-core A/B round 6)
-    pairs = minhash_lsh_pairs(
-        live, threshold=neardup_threshold, verify="join"
-    )
+    pairs = minhash_lsh_pairs(live, threshold=neardup_threshold)
     comps = dedup_clusters(
         pairs, vertices=live.select("doc_id"), id_a="doc_a", id_b="doc_b"
     )

@@ -620,9 +620,9 @@ def plan_wave(
     scheduled = assign_deadlines(unseen, hs, batch_ts,
                                  max_per_host=max_per_host)
     # the fetch is a shuffle_hash join on url, whose hash partitioning
-    # already spreads the validate UDF over every shuffle partition (a
-    # salted_repartition would be one more full shuffle of the widest
-    # rows); the order columns have done their job once the wave is set
+    # spreads the validate UDF, hot hosts included, over every shuffle
+    # partition with no extra shuffle of the widest rows; the order
+    # columns have done their job once the wave is set
     fetched = hermetic_fetch(
         scheduled.drop("site_seq", "depth", "path", "sitemap_pos"),
         world["web_pages"], batch_ts,

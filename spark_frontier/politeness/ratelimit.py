@@ -19,10 +19,11 @@ logical time and stay deterministic.
 
 The per-host window partitions by host — that is the politeness unit and
 is bounded by the per-batch per-host selection cap, not frontier size.
-Hot-host skew in the SHUFFLE is handled separately by salting
-(frontier/priority.py); the politeness window itself must see the whole
-host to be correct, which is fine because the scheduler caps how many URLs
-per host enter a batch (max_per_host) *before* the window runs.
+Hot-host skew in the wave's UDF stages is spread by the fetch join's
+hash partitioning on url (pipeline/crawl.py); the politeness window
+itself must see the whole host to be correct, which is fine because the
+scheduler caps how many URLs per host enter a batch (max_per_host)
+*before* the window runs.
 """
 
 from __future__ import annotations

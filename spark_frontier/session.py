@@ -35,15 +35,6 @@ def worker_daemon_conf() -> dict[str, str]:
     }
 
 
-def tasks_per_core(env_var: str) -> int:
-    """A tasks-per-core slack knob read from ``env_var``: a positive int,
-    or 1 when unset or malformed (a bad knob must not kill a cycle)."""
-    try:
-        return max(int(os.environ.get(env_var, "1")), 1)
-    except ValueError:
-        return 1
-
-
 def get_spark(
     app_name: str = "spark-frontier",
     cores: int | None = None,

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_frontier.session import tasks_per_core
 from spark_frontier.sitemap.parser import parse_sitemaps
 from spark_frontier.storage.materialize import materialize
 
@@ -94,13 +93,7 @@ def expand_sitemap_tree(
         # partition-count heuristic here collapsed the whole level's parse
         # onto one core). The exchange moves compressed document bytes
         # once and is the only robust way to give the parse real fan-out.
-        # tasks-per-core slack (same rationale as salted_repartition): one
-        # parse task per core leaves no room to rebalance around document
-        # skew — a partition that hashed two large sitemaps holds the
-        # whole level. >1 trades a little per-task overhead for scheduler
-        # slack; tunable because the right value is corpus-dependent.
-        par = spark.sparkContext.defaultParallelism * tasks_per_core(
-            "SPARK_FRONTIER_PARSE_TASKS_PER_CORE")
+        par = spark.sparkContext.defaultParallelism
         parsed = parse_sitemaps(
             docs.select("sitemap_url", "content").repartition(par, "sitemap_url")
         )

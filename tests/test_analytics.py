@@ -316,18 +316,54 @@ def test_doc_stats_matches_jvm_pipeline(spark):
             assert st[did][:5] == list(sig[did]), did
 
 
-def test_minhash_verify_paths_identical(spark):
-    """minhash_lsh_pairs' two verify topologies (bucket kernel vs
-    id-join + JVM fold) must return identical pairs AND identical
-    estimate doubles on the same corpus."""
-    from spark_frontier.analytics.dedup import minhash_lsh_pairs
+def _lsh_pairs_reference(sigs, num_perm, bands, threshold):
+    """Banded LSH in plain numpy over collected signatures: a pair is a
+    candidate iff some band's ``rows_per_band`` slice is equal, its
+    estimate is agreements / num_perm, and pairs with an estimate ≥
+    threshold are kept as (doc_a < doc_b). Also returns the largest
+    same-slice group, so a caller can check which kernel branch ran."""
+    from itertools import combinations
+
+    ids = sorted(sigs)
+    M = np.array([sigs[i] for i in ids], dtype=np.int64)
+    r = num_perm // bands
+    cand, biggest = set(), 0
+    for b in range(bands):
+        groups: dict[bytes, list[int]] = {}
+        for k, row in enumerate(M[:, b * r:(b + 1) * r]):
+            groups.setdefault(row.tobytes(), []).append(k)
+        for g in groups.values():
+            biggest = max(biggest, len(g))
+            cand.update(combinations(g, 2))      # g ascending → ids ascending
+    out = {}
+    for a, b in cand:
+        est = int(np.count_nonzero(M[a] == M[b])) / num_perm
+        if est >= threshold:
+            out[(ids[a], ids[b])] = est
+    return out, biggest
+
+
+def test_minhash_lsh_matches_reference(spark, monkeypatch):
+    """minhash_lsh_pairs' bucket kernel returns exactly the pairs and the
+    estimate doubles of a numpy banded-LSH reference over the same
+    signatures — through the batched small-group tensors, and again with
+    ``_BIG`` at 2, so every group of ≥ 3 rows takes the chunked
+    row-matrix branch."""
+    from spark_frontier.analytics import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    a = {(r["doc_a"], r["doc_b"]): r["jaccard_est"]
-         for r in minhash_lsh_pairs(docs, verify="bucket").collect()}
-    b = {(r["doc_a"], r["doc_b"]): r["jaccard_est"]
-         for r in minhash_lsh_pairs(docs, verify="join").collect()}
-    assert a == b and len(a) > 0
+    sigs = {r["doc_id"]: r["signature"]
+            for r in dedup.minhash_signatures(docs).collect()}
+    want, biggest = _lsh_pairs_reference(sigs, 64, 16, 0.5)
+    assert want and biggest >= 3
+
+    def got():
+        return {(r["doc_a"], r["doc_b"]): r["jaccard_est"]
+                for r in minhash_lsh_pairs(docs).collect()}
+
+    assert got() == want
+    monkeypatch.setattr(dedup, "_BIG", 2)
+    assert got() == want
 
 
 def test_blocked_cosine_kernel_parity(spark):

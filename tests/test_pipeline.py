@@ -462,29 +462,6 @@ def test_first_per_key_matches_window(spark):
     assert got.count() == 5
 
 
-def test_malformed_tasks_per_core_env_falls_back(spark, world, monkeypatch):
-    """A malformed tasks-per-core knob falls back to 1 task per core
-    instead of raising ValueError out of sitemap expansion or the salted
-    repartition."""
-    from spark_frontier.frontier.priority import salted_repartition
-    from spark_frontier.sitemap.expand import expand_sitemap_tree
-
-    monkeypatch.setenv("SPARK_FRONTIER_PARSE_TASKS_PER_CORE", "two")
-    monkeypatch.setenv("SPARK_FRONTIER_TASKS_PER_CORE", "")
-    sites = world["sites"].filter(F.col("is_active"))
-    entries = expand_sitemap_tree(
-        sites.select("site_id", "site_seq", "sitemap_url"),
-        world["sitemap_pages"],
-    )
-    assert entries.count() > 0
-    salted = salted_repartition(
-        entries.select(F.col("loc").alias("url"),
-                       F.lit("h").alias("host")), 4
-    )
-    assert salted.rdd.getNumPartitions() == \
-        spark.sparkContext.defaultParallelism
-
-
 def test_funnel_metrics_equal_direct_counts(spark, world, tmp_path_factory):
     """collect_metrics counts the sitemap entries and the robots denials
     with Observations on the candidates job; on a world where robots.txt
