@@ -1027,8 +1027,6 @@ def q44_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(
         pairs,
         vertices=ph.select(F.col("image_id").alias("doc_id")),
-        id_a="id_a",
-        id_b="id_b",
     ).select(F.col("doc_id").alias("image_id"), "cluster_id")
 
 
@@ -2305,10 +2303,10 @@ def _q35_pairs_sql() -> str:
             SELECT * FROM (VALUES
             {_phash_values_sql()}) AS t(image_id, phash)),
         p AS (
-            SELECT a.image_id AS id_a, b.image_id AS id_b,
+            SELECT a.image_id AS doc_a, b.image_id AS doc_b,
                    CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming
             FROM ph a JOIN ph b ON a.image_id < b.image_id)
-        SELECT id_a, id_b, hamming FROM p WHERE hamming <= 6
+        SELECT doc_a, doc_b, hamming FROM p WHERE hamming <= 6
     """
 
 
@@ -2327,9 +2325,9 @@ def _q44_oracle() -> str:
             SELECT image_id FROM (VALUES
             {_phash_values_sql()}) AS t(image_id, phash)),
         edges AS (
-            SELECT id_a AS src, id_b AS dst FROM near_pairs
+            SELECT doc_a AS src, doc_b AS dst FROM near_pairs
             UNION
-            SELECT id_b, id_a FROM near_pairs),
+            SELECT doc_b, doc_a FROM near_pairs),
         reach(id, lab) AS (
             SELECT src, src FROM edges
             UNION

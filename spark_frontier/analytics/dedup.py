@@ -16,7 +16,8 @@ n_chars):
                          emits only survivors. The scale path: work ∝
                          bucket sizes, not n². Probabilistic recall
                          (tunable perms/bands).
-- simhash_pairs          64-bit SimHash + chunk-banding for hamming ≤ k
+- simhash_pairs          64-bit SimHash → hamming_neardup_pairs (4×16-bit
+                         chunk banding, exact for hamming ≤ 3)
 - embedding_neardup      cosine ≥ τ pairs over embeddings (block join)
 
 Each has a ``queries()`` entry in __spark_entry__.py with a DuckDB oracle:
@@ -571,9 +572,11 @@ def minhash_lsh_pairs(
 def simhash_pairs(
     docs: DataFrame, max_hamming: int = 3, text_col: str = "text"
 ) -> DataFrame:
-    """64-bit SimHash over token hashes; near-dup pairs via 4-chunk banding
-    (pigeonhole: hamming ≤ 3 ⇒ at least one 16-bit chunk equal), then exact
-    hamming verify with bit_count(xor). All JVM-side."""
+    """64-bit SimHash over token hashes; near-dup pairs by
+    ``hamming_neardup_pairs`` with 4×16-bit chunks (pigeonhole: hamming
+    ≤ 3 ⇒ at least one chunk equal, so ``max_hamming`` > 3 is refused),
+    then an exact bit_count(xor) verify. Returns (doc_a, doc_b,
+    hamming)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -619,36 +622,10 @@ def simhash_pairs(
     sigs = docs.select("doc_id", F.col(text_col)).repartition(par).select(
         "doc_id", _simhash(F.col(text_col)).alias("simhash")
     ).transform(materialize)
-    chunks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF))
-                    for i in range(4)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    cand = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), on=["chunk_idx", "chunk_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    # signatures are < 2^60 (non-negative), so the unsigned shift in the
+    # banding sees the same 16-bit chunks as a signed one
+    return hamming_neardup_pairs(sigs, "doc_id", "simhash",
+                                 max_hamming=max_hamming, n_chunks=4)
 
 
 # ---------------------------------------------------------------------------
@@ -673,10 +650,12 @@ def hamming_neardup_pairs(
     Scale: candidates come only from same-chunk buckets — cost tracks
     true near-dup density, never O(n²). The join shuffles on
     (chunk_idx, chunk_val); the exact bit_count(xor) verify is JVM-side
-    whole-stage codegen. Same topology as simhash_pairs but over a
-    caller-supplied fingerprint, so the image pipeline reuses it on the
-    phash column that payload/validate.py recomputes from decoded
-    pixels.
+    whole-stage codegen. ``simhash_pairs`` runs it on its text
+    signatures, and the image pipeline on the phash column that
+    payload/validate.py recomputes from decoded pixels.
+
+    Returns (doc_a, doc_b, hamming) with doc_a < doc_b, the pair
+    columns ``dedup_clusters`` reads by default.
     """
     assert max_hamming <= n_chunks - 1, "pigeonhole exactness bound"
     assert 64 % n_chunks == 0
@@ -700,19 +679,19 @@ def hamming_neardup_pairs(
         .join(chunks.alias("b"), on=["chunk_idx", "chunk_val"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
+            F.col("a.id").alias("doc_a"),
+            F.col("b.id").alias("doc_b"),
             F.col("a.fp").alias("fp_a"),
             F.col("b.fp").alias("fp_b"),
         )
-        .dropDuplicates(["id_a", "id_b"])
+        .dropDuplicates(["doc_a", "doc_b"])
     )
     return (
         cand.withColumn(
             "hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        .select("doc_a", "doc_b", "hamming")
     )
 
 
@@ -1033,6 +1012,9 @@ def dedup_clusters(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("label").alias("nbr_label"))
         )
+        # the changed count rides the materialize job (the edge gate's
+        # Observation pattern above), not a count job of its own
+        obs_chg = _Obs()
         merged = (
             labels.join(prop, on="id", how="left")
             .select(
@@ -1043,8 +1025,9 @@ def dedup_clusters(
                 ).alias("label"),
                 (F.col("nbr_label") < F.col("label")).alias("_chg"),
             )
+            .observe(obs_chg, F.count_if(F.col("_chg")).alias("n"))
         ).transform(materialize)
-        n_changed = merged.filter(F.col("_chg")).count()
+        n_changed = int(obs_chg.get["n"] or 0)
         labels = merged.drop("_chg")
         if n_changed == 0:
             break

@@ -7,7 +7,8 @@ chains these stages, in order:
 1. ``open_seen`` + ``open_host_state`` (the cycle's init, on a commit-lane
    thread, overlapped with discovery): the seen index — the links
    snapshot's keys, fronted by the bloom — and the host state.
-2. ``expand_sitemap_tree``: sitemap BFS.
+2. ``expand_sitemap_tree``: sitemap BFS (skipped when the caller passes
+   the ``entries``, as the stream does).
 3. ``frontier``: recency filter → candidate build (canonicalize / hash /
    reject filter) → robots gate → within-cycle dedupe → within-days filter.
 4. ``plan_wave``, once per politeness wave: URL-seen dedup (bloom +
@@ -19,8 +20,8 @@ chains these stages, in order:
 
 Every table commit rides a ``_CommitLanes`` lane keyed by table (strictly
 ordered within a table, concurrent across tables), and all lanes are
-drained before the cycle returns. ``start_stream_crawl`` runs the same
-``frontier`` and ``plan_wave`` per micro-batch.
+drained before the cycle returns. ``start_stream_crawl`` runs one whole
+cycle per micro-batch, over the entries that micro-batch received.
 
 State lives in a SnapStore (Iceberg in production): ``links`` (the seen
 store + payload, reference article_links), ``host_state``, ``bloom``,
@@ -662,6 +663,7 @@ def run_crawl_cycle(
     collect_metrics: bool = True,
     process_within_days: int | None = None,
     report: CycleReport | None = None,
+    entries: DataFrame | None = None,
 ) -> CycleReport:
     """Run one crawl cycle to frontier exhaustion (or stop_after_wave, for
     the resume test). Returns funnel counters.
@@ -685,7 +687,11 @@ def run_crawl_cycle(
 
     ``report``: callers may pass a CycleReport to watch funnel counters
     mid-cycle from another thread (EP3 status surface,
-    api/controller.py)."""
+    api/controller.py).
+
+    ``entries``: parsed sitemap entries (``CANDIDATE_DDL`` rows) to crawl
+    instead of expanding the active sites' sitemap trees — one stream
+    micro-batch (streaming/microbatch.py)."""
     if report is None:
         report = CycleReport()
     sites = world["sites"].filter(F.col("is_active")).orderBy("site_seq")
@@ -708,10 +714,11 @@ def run_crawl_cycle(
                          open_host_state(spark, host_tbl, lanes)),
                 spark_pool="init",
             )
-            entries = expand_sitemap_tree(
-                sites.select("site_id", "site_seq", "sitemap_url"),
-                world["sitemap_pages"],
-            )
+            if entries is None:
+                entries = expand_sitemap_tree(
+                    sites.select("site_id", "site_seq", "sitemap_url"),
+                    world["sitemap_pages"],
+                )
             candidates, observed = frontier(
                 world, entries, sites, batch_ts, days, process_within_days,
                 observe=collect_metrics,

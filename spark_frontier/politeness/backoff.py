@@ -35,6 +35,8 @@ from spark_frontier.politeness.ratelimit import (  # noqa: E402
 
 # snapshot-summary key of a deferred fold (SnapStore GC pins its files)
 _PENDING = "pending_fold"
+# the fold's columns of its lineage files, read by name with no footer job
+_FOLD_DDL = "host string, politeness_deadline timestamp, http_code int"
 
 
 def empty_host_state(spark) -> DataFrame:
@@ -66,28 +68,30 @@ def read_host_state(table, spark) -> DataFrame | None:
     """Read a persisted host-state SnapTable, applying any DEFERRED fold
     its current snapshot records (``deferred_fold_summary``). The next
     crawl cycle folds it at init, overlapped with sitemap discovery;
-    external readers (reporting, the streaming topology) get the same
+    external readers (reporting, job status) get the same
     folded view through this helper.
 
-    If the fold's lineage files are unreadable (retention rewrite,
-    manual cleanup) the stale base is returned: stale politeness state
-    only ever *over*-throttles, the documented crash-resume semantics.
-    Returns None when the table has never been written and carries no
-    pending fold.
+    If the fold's lineage files are gone (retention rewrite, manual
+    cleanup) the stale base is returned: stale politeness state only
+    ever *over*-throttles, the documented crash-resume semantics. Any
+    other read failure raises. Returns None when the table has never
+    been written and carries no pending fold.
     """
+    from pyspark.errors import AnalysisException
+
     hs = table.read(spark)
     pend = (table.summary() or {}).get(_PENDING)
     if not pend:
         return hs
     base = hs if hs is not None else empty_host_state(spark)
     try:
-        rows = spark.read.parquet(*pend["files"]).select(
-            "host", "politeness_deadline", "http_code"
-        )
-        ts = datetime.fromisoformat(pend["batch_ts"])
-        return update_host_state(base, rows, ts)
-    except Exception:
+        rows = spark.read.schema(_FOLD_DDL).parquet(*pend["files"])
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return base
+    return update_host_state(base, rows,
+                             datetime.fromisoformat(pend["batch_ts"]))
 
 
 def update_host_state(

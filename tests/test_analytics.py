@@ -163,15 +163,37 @@ def test_minhash_lsh_recall(spark):
             assert abs(r["jaccard_est"] - true_j) < 0.25
 
 
+def _simhash_ref(text: str) -> int:
+    """Pure-Python SimHash: ±1 votes of each token's md5-60 bits."""
+    import hashlib
+
+    votes = [0] * 64
+    for tok in (text or "").lower().split():
+        h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+        for b in range(64):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    return sum(1 << b for b in range(64) if votes[b] > 0)
+
+
 def test_simhash_finds_neardups(spark):
-    pairs = simhash_pairs(_docs(spark), max_hamming=6).collect()
-    found = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    planted = {(i, i + 100) for i in range(5)}
-    assert len(planted & found) >= 4  # simhash is lossier; ≥4/5 expected
-    # extra pairs are allowed only within the i+200 "filler" family, whose
-    # members genuinely share ~90% of their tokens with each other
-    for a, b in found - planted:
-        assert a >= 200 and b >= 200, (a, b)
+    """simhash_pairs equals an exhaustive Hamming scan over pure-Python
+    signatures; 4×16-bit banding is exact only up to distance 3, so a
+    larger bound is refused."""
+    import itertools
+
+    docs = _docs(spark)
+    pairs = simhash_pairs(docs, max_hamming=3).collect()
+    found = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in pairs}
+    sigs = sorted((r["doc_id"], _simhash_ref(r["text"]))
+                  for r in docs.collect())
+    want = {(a, b, bin(ha ^ hb).count("1"))
+            for (a, ha), (b, hb) in itertools.combinations(sigs, 2)
+            if bin(ha ^ hb).count("1") <= 3}
+    assert found == want
+    # the planted pairs (i, i+100) at distance ≤ 3 on this fixture
+    assert {(a, b) for a, b, _ in want} >= {(0, 100), (2, 102), (4, 104)}
+    with pytest.raises(AssertionError, match="pigeonhole"):
+        simhash_pairs(docs, max_hamming=6)
 
 
 def _emb(spark, n=200, dim=16, seed=5):

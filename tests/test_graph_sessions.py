@@ -77,7 +77,7 @@ def test_hamming_banding_exact_vs_bruteforce(spark):
         rows.append((100 + j, hu - (1 << 64) if hu >= (1 << 63) else hu))
     df = spark.createDataFrame(rows, ["id", "fp"])
     got = {
-        (r["id_a"], r["id_b"], r["hamming"])
+        (r["doc_a"], r["doc_b"], r["hamming"])
         for r in hamming_neardup_pairs(
             df, "id", "fp", max_hamming=6, n_chunks=8
         ).collect()

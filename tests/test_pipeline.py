@@ -29,6 +29,20 @@ def _fresh_store(tmp_path_factory) -> SnapStore:
     return SnapStore(str(tmp_path_factory.mktemp("store")))
 
 
+def _jobs_run(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` starts on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cycle_end_to_end(spark, world, tmp_path_factory):
     store = _fresh_store(tmp_path_factory)
     seed_seen_store(store, world["url_seen"])
@@ -101,6 +115,10 @@ def test_host_state_deferred_fold_parity(spark, world, tmp_path_factory):
         folded = read_host_state(host_tbl, spark)
         assert folded.exceptAll(expected).count() == 0
         assert expected.exceptAll(folded).count() == 0
+        # the fold reads its lineage files with the known schema: building
+        # the folded view starts no job beyond the base table read's
+        assert (_jobs_run(spark, lambda: read_host_state(host_tbl, spark))
+                == _jobs_run(spark, lambda: host_tbl.read(spark)))
         return pend
 
     # single-wave drain (metadata-only marker commit)

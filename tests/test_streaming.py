@@ -161,11 +161,14 @@ def test_stream_robots_gate_matches_batch(spark, world_dir, tmp_path_factory):
     ak = a.select("url_key")
     bk = b.select("url_key")
     assert ak.exceptAll(bk).count() == 0 and bk.exceptAll(ak).count() == 0
-    # bloom provenance kept current by the stream (next batch would probe,
-    # not full-anti-join)
+    # the bloom covers a links head the next micro-batch can catch up
+    # from incrementally (it would probe, not rebuild)
     meta = stream_store.table("bloom").summary()
-    assert meta.get("covers_links") == stream_store.table("links").snapshot_id
-    assert meta.get("n_segments")
+    links_tbl = stream_store.table("links")
+    assert meta.get("n_segments") and meta.get("m_bits")
+    assert meta.get("covers_links") in {
+        h["snapshot_id"] for h in links_tbl.history()}
+    links_tbl.read_changes(spark, meta["covers_links"])  # no rewrite since
 
 
 def test_stream_duplicate_candidates_enter_once(spark, world_dir,
@@ -260,144 +263,126 @@ def test_stream_k5_executor_push(spark, world_dir, tmp_path_factory):
     assert len(pushed) == total - seeded
 
 
-def test_stateful_backoff_matches_batch_fold(spark, tmp_path_factory):
-    """applyInPandasWithState per-host throttle state across micro-batches
-    equals the batch operator's single fold over the same data (T2/T3
-    parity in the streaming shape)."""
-    from datetime import datetime, timedelta
-
-    from spark_frontier.politeness.backoff import (
-        empty_host_state,
-        update_host_state,
-    )
-    from spark_frontier.streaming.stateful import stateful_host_backoff
-
-    t0 = datetime(2026, 8, 15, 12, 0, 0)
-    batch_ts = datetime(2026, 8, 15, 13, 0, 0)
-    # deterministic per-host code sequences covering reset, blocking, 429
-    # halving, and a clean host; deadlines increase with sequence position
-    seqs = {
-        "block.com": [429, 403, 429, 403, 429, 404],
-        "reset.com": [429, 429, 200, 500, 404],
-        "limit.com": [429, 429, 429, 429, 429, 429],
-        "ok.com": [200, 200, 301],
-    }
-    rows = []
-    for host, codes in seqs.items():
-        for i, c in enumerate(codes):
-            rows.append((host, t0 + timedelta(seconds=10 * i), c))
-    df = spark.createDataFrame(
-        rows, "host string, politeness_deadline timestamp, http_code int"
+def _seeded_host_state(world, refill_rate):
+    """One unblocked host_state row per world host, at ``refill_rate``."""
+    return world["robots_docs"].select(
+        "host",
+        F.lit(refill_rate).alias("refill_rate"),
+        F.lit(None).cast("timestamp").alias("rate_limit_until"),
+        F.lit(None).cast("timestamp").alias("last_fetch_ts"),
+        F.lit(0).alias("consecutive_failures"),
+        F.array().cast("array<int>").alias("recent_codes"),
+        F.lit(False).alias("is_blocked"),
     )
 
-    expected = {
-        r["host"]: r
-        for r in update_host_state(
-            empty_host_state(spark), df, batch_ts
-        ).collect()
-    }
 
-    # stream the same rows in 3 files, ordered so arrival order == deadline
-    # order (the stream-time contract)
-    src = str(tmp_path_factory.mktemp("sf_src"))
-    import os
-
-    for k in range(3):
-        part = df.filter(
-            F.floor((F.unix_timestamp("politeness_deadline") % 60) / 20) == k
-        )
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, f"f{k}")
-        )
-    stream = (
-        spark.readStream.schema(
-            "host string, politeness_deadline timestamp, http_code int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    out = stateful_host_backoff(stream, batch_ts)
-    captured: list = []
-
-    def _capture(bdf, bid):
-        captured.extend((int(bid), r) for r in bdf.collect())
-
-    q = (
-        out.writeStream.foreachBatch(_capture)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", str(tmp_path_factory.mktemp("sf_ckpt"))
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    # highest-batch-id update per host is the final state
-    final = {}
-    for bid, r in sorted(captured, key=lambda x: x[0]):
-        final[r["host"]] = r
-    assert set(final) == set(expected)
-    for host in expected:
-        e, g = expected[host], final[host]
-        assert g["consecutive_failures"] == e["consecutive_failures"], host
-        assert g["is_blocked"] == e["is_blocked"], host
-        assert list(g["recent_codes"]) == list(e["recent_codes"]), host
-        assert abs(g["refill_rate"] - e["refill_rate"]) < 1e-9, host
-        assert g["rate_limit_until"] == e["rate_limit_until"], host
-        assert g["last_fetch_ts"] == e["last_fetch_ts"], host
+SEEDED_RATE = 0.25
 
 
-def test_stateful_backoff_integrated_topology(spark, world_dir,
-                                              tmp_path_factory):
-    """VERDICT r3 #4: the applyInPandasWithState operator now CARRIES the
-    host state in the real streaming crawl. Parity oracle: fold the
-    per-micro-batch results the integration landed (results_dir, batch
-    order) through the batch operator — Spark-managed state must equal
-    that iterated fold exactly."""
-    import glob
-    import re
-
-    from spark_frontier.politeness.backoff import (
-        empty_host_state,
-        update_host_state,
-    )
-
+@pytest.fixture(scope="module")
+def capped_runs(spark, world_dir, tmp_path_factory):
+    """The batch cycle and the stream over the module world at
+    ``max_per_host=4`` (many waves per host), both from the same seeded
+    links and a seeded host_state at refill_rate ``SEEDED_RATE``."""
     world = load_world(spark, world_dir)
-    cand_dir = _cand_stream_dir(spark, world, tmp_path_factory, "st_cand")
-    store = SnapStore(str(tmp_path_factory.mktemp("st_store")))
-    seed_seen_store(store, world["url_seen"])
-    ckpt = str(tmp_path_factory.mktemp("st_ckpt"))
+    stores = {}
+    for name in ("batch", "stream"):
+        st = SnapStore(str(tmp_path_factory.mktemp(f"cap_{name}")))
+        seed_seen_store(st, world["url_seen"])
+        st.table("host_state").overwrite(
+            _seeded_host_state(world, SEEDED_RATE),
+            summary={"op": "seed"}, small=True,
+        )
+        stores[name] = st
+    report = run_crawl_cycle(spark, world, stores["batch"], batch_ts=NOW,
+                             days=7, max_per_host=4)
+    assert report.waves > 1
+    cand_dir = _cand_stream_dir(spark, world, tmp_path_factory, "cap_cand",
+                                nfiles=6)
     q = start_stream_crawl(
-        spark, cand_dir, world, store, ckpt, batch_ts=NOW,
-        max_per_host=10_000, available_now=True,
+        spark, cand_dir, world, stores["stream"],
+        str(tmp_path_factory.mktemp("cap_ckpt")), batch_ts=NOW,
+        max_per_host=4, available_now=True,
     )
     q.awaitTermination(300)
+    return stores
 
-    # oracle: iterate the batch fold over the landed per-batch results
-    results_dir = ckpt.rstrip("/") + "_results"
-    batch_dirs = sorted(
-        (d for d in glob.glob(results_dir + "/batch_*")
-         if re.search(r"batch_\d+$", d)),
-        key=lambda d: int(d.rsplit("_", 1)[1]),
-    )
-    assert batch_dirs, "integration landed no per-batch results"
-    hs = empty_host_state(spark)
-    for d in batch_dirs:
-        hs = update_host_state(hs, spark.read.parquet(d), NOW)
-    expected = {r["host"]: r for r in hs.collect()}
 
-    got = {
-        r["host"]: r
-        for r in store.table("host_state").read(spark).collect()
+def test_stream_matches_batch_at_host_cap(spark, capped_runs):
+    """Every wave of every micro-batch drains: with ``max_per_host=4`` the
+    stream saves the same link keys as the batch cycle, none dropped past
+    a host's per-wave cap."""
+    def _keys(st):
+        return sorted(r["url_key"] for r in
+                      st.table("links").read(spark).select("url_key")
+                      .collect())
+
+    assert _keys(capped_runs["stream"]) == _keys(capped_runs["batch"])
+
+
+def test_stream_folds_seeded_host_state(spark, capped_runs):
+    """The stream's host fold starts from the persisted host_state, not
+    from scratch: a host's seeded refill_rate is halved once per 429 it
+    got (floor 0.1) and kept otherwise."""
+    from spark_frontier.politeness.backoff import read_host_state
+    from spark_frontier.politeness.ratelimit import MIN_REFILL_RATE
+
+    store = capped_runs["stream"]
+    got = {r["host"]: r["refill_rate"] for r in
+           read_host_state(store.table("host_state"), spark).collect()}
+    # a 429 only ever lowers the seeded rate; nothing resets it
+    assert max(got.values()) <= SEEDED_RATE, got
+    n429 = {
+        r["host"]: r["n"]
+        for r in store.table("fetch_log").read(spark)
+        .groupBy("host")
+        .agg(F.sum((F.col("http_code") == 429).cast("int")).alias("n"))
+        .collect()
     }
+    assert set(n429) <= set(got)
+    for host, rate in got.items():
+        want = max(MIN_REFILL_RATE, SEEDED_RATE * 0.5 ** n429.get(host, 0))
+        assert abs(rate - want) < 1e-12, (host, n429.get(host), rate)
+
+
+def test_stateful_backoff_integrated_topology(spark, capped_runs):
+    """The host state after the stream equals ``update_host_state``
+    folded over the stream's waves, in commit order, from the seeded
+    state: each wave folds once, and a micro-batch's deferred final-wave
+    fold is applied by the next one (or by ``read_host_state``)."""
+    from spark_frontier.politeness.backoff import (
+        read_host_state,
+        update_host_state,
+    )
+    from spark_frontier.storage.materialize import materialize
+
+    store = capped_runs["stream"]
+    log = store.table("fetch_log")
+    hs = store.table("host_state").read_at(
+        spark, store.table("host_state").history()[0]["snapshot_id"])
+    prev: set = set()
+    n_waves = 0
+    for h in log.history():
+        files = set(log._manifest(h["snapshot_id"])["files"])
+        new = sorted(files - prev)
+        prev = files
+        if not new:
+            continue
+        n_waves += 1
+        rows = spark.read.parquet(*new).select(
+            "host", "politeness_deadline", "http_code")
+        hs = update_host_state(hs, rows, NOW).transform(materialize)
+    assert n_waves > 2
+    expected = {r["host"]: r for r in hs.collect()}
+    got = {r["host"]: r for r in
+           read_host_state(store.table("host_state"), spark).collect()}
     assert set(got) == set(expected)
     for host, e in expected.items():
         g = got[host]
         assert g["consecutive_failures"] == e["consecutive_failures"], host
         assert g["is_blocked"] == e["is_blocked"], host
         assert list(g["recent_codes"] or []) == list(e["recent_codes"] or []), host
-        assert abs(g["refill_rate"] - e["refill_rate"]) < 1e-9, host
+        assert abs(g["refill_rate"] - e["refill_rate"]) < 1e-12, host
         assert g["rate_limit_until"] == e["rate_limit_until"], host
         assert g["last_fetch_ts"] == e["last_fetch_ts"], host
 
@@ -405,38 +390,39 @@ def test_stateful_backoff_integrated_topology(spark, world_dir,
 def test_stream_stale_bloom_nonblocking_single_scan(spark, world_dir,
                                                     tmp_path_factory,
                                                     monkeypatch):
-    """VERDICT r3 #5: a stale/absent bloom must not stall the micro-batch
-    — links commit FIRST, the rebuild reads the links table exactly ONCE
-    (beyond the batch's own seen read), and provenance self-heals to the
-    final links head."""
-    import threading
-    import time as _time
-
+    """Starting with no bloom, every micro-batch probes a bloom whose
+    ``covers_links`` is the links head that micro-batch read — built by
+    the first, caught up from the links delta by the next — and each
+    micro-batch scans the links table once."""
+    from spark_frontier.pipeline import crawl
     from spark_frontier.storage.snapstore import SnapTable
 
     world = load_world(spark, world_dir)
     cand_dir = _cand_stream_dir(spark, world, tmp_path_factory, "bl_cand",
-                                nfiles=2)
+                                nfiles=6)
     store = SnapStore(str(tmp_path_factory.mktemp("bl_store")))
     seed_seen_store(store, world["url_seen"])  # links exist, NO bloom
 
-    events = []
-    lock = threading.Lock()
+    heads, probes, links_reads = [], [], []
+    real_open_seen, real_dedup = crawl.open_seen, crawl.dedup_unseen
     real_read = SnapTable.read
-    real_append = SnapTable.append
-    real_overwrite = SnapTable.overwrite
 
-    def _rec(kind):
-        def _w(self, *a, **kw):
-            with lock:
-                events.append((kind, self.name, _time.monotonic()))
-            return {"read": real_read, "append": real_append,
-                    "overwrite": real_overwrite}[kind](self, *a, **kw)
-        return _w
+    def spy_open_seen(spark_, store_, *a, **kw):
+        heads.append(store_.table("links").snapshot_id)
+        return real_open_seen(spark_, store_, *a, **kw)
 
-    monkeypatch.setattr(SnapTable, "read", _rec("read"))
-    monkeypatch.setattr(SnapTable, "append", _rec("append"))
-    monkeypatch.setattr(SnapTable, "overwrite", _rec("overwrite"))
+    def spy_dedup(frontier, seen_keys, **kw):
+        probes.append(kw.get("segments") is not None)
+        return real_dedup(frontier, seen_keys, **kw)
+
+    def spy_read(self, spark_):
+        if self.name == "links":
+            links_reads.append(self.snapshot_id)
+        return real_read(self, spark_)
+
+    monkeypatch.setattr(crawl, "open_seen", spy_open_seen)
+    monkeypatch.setattr(crawl, "dedup_unseen", spy_dedup)
+    monkeypatch.setattr(SnapTable, "read", spy_read)
 
     q = start_stream_crawl(
         spark, cand_dir, world, store,
@@ -444,22 +430,21 @@ def test_stream_stale_bloom_nonblocking_single_scan(spark, world_dir,
         max_per_host=10_000, available_now=True,
     )
     q.awaitTermination(300)
+    monkeypatch.undo()
 
-    links_appends = [e for e in events if e[0] == "append" and e[1] == "links"]
-    bloom_commits = [e for e in events if e[0] == "overwrite" and e[1] == "bloom"]
-    links_reads = [e for e in events if e[0] == "read" and e[1] == "links"]
-    n_batches = len(links_appends)
-    assert n_batches >= 1 and bloom_commits
-    # ordering: the FIRST links append precedes the first bloom commit
-    assert links_appends[0][2] < bloom_commits[0][2]
-    # scan budget: each batch reads links once for its seen set; each
-    # REBUILD reads it exactly once more — never the old read-twice
-    # (count + re-read) shape. Rebuilds ≤ batches, so:
-    assert len(links_reads) <= 2 * n_batches
-    # provenance self-heals to the final links head, with m_bits recorded
-    meta = store.table("bloom").summary()
-    assert meta.get("covers_links") == store.table("links").snapshot_id
-    assert meta.get("m_bits") and meta.get("n_segments")
+    assert len(heads) >= 2 and len(set(heads)) == len(heads)
+    assert probes and all(probes)
+    # the bloom commits cover exactly the heads the micro-batches read:
+    # a build for the first, a catch-up for each later one
+    bloom_hist = store.table("bloom").history()
+    assert [h["summary"].get("covers_links") for h in bloom_hist] == heads
+    assert [h["summary"]["op"] for h in bloom_hist] == (
+        ["bloom_build"] + ["bloom_catchup"] * (len(heads) - 1))
+    assert all(h["summary"].get("m_bits") and h["summary"].get("n_segments")
+               for h in bloom_hist)
+    # scan budget: one links read per micro-batch (its seen set); the
+    # catch-up reads only the delta (read_changes)
+    assert links_reads == heads
 
 
 def test_windowed_metrics_watermark_drops_late(spark, tmp_path_factory):
