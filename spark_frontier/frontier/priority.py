@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from spark_frontier.functions.urls import (
     canonicalize_url,
     host_of,
-    sha256_hex,
     url_key_canonical,
 )
 from spark_frontier.frontier.recency import url_pattern_ok
@@ -40,8 +39,8 @@ def build_candidates(entries: DataFrame) -> DataFrame:
     (changefreq/priority/news_publication_name/parse_mode): candidate rows
     ride through every frontier shuffle (dedupe window, politeness window,
     fetch join), so each dropped byte is paid back 3-4×. The sha256 parity
-    hash (url_hash) is likewise computed LATE, in build_link_rows, where
-    only the fetched wave carries it."""
+    hash (url_hash) rides no row at all: the links view derives it from
+    ``url`` when it is scanned (crawl.LINK_VIEW)."""
     return (
         entries.withColumnRenamed("loc", "url")
         .filter(url_pattern_ok(F.col("url")))

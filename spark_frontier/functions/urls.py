@@ -155,10 +155,20 @@ def url_key_canonical(canon_col: Column) -> Column:
     return F.xxhash64(canon_col)
 
 
+_SHA2_BITS = 256
+
+
 def sha256_hex(url_col: Column) -> Column:
     """Reference-parity hash: SHA-256 hex of the RAW url
     (repository.py:92-94 hashes the exact string, no normalization)."""
-    return F.sha2(url_col, 256)
+    return F.sha2(url_col, _SHA2_BITS)
+
+
+def sha256_hex_sql(url: str) -> str:
+    """``sha256_hex`` as a SQL expression over the column named ``url``:
+    the form a scan-time view projection stores in a manifest
+    (``SnapTable.append_shared_files(columns=)``)."""
+    return f"sha2({url}, {_SHA2_BITS})"
 
 
 def host_of(url_col: Column) -> Column:

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from spark_frontier.frontier.priority import build_candidates
 from spark_frontier.frontier.recency import filter_recent
 from spark_frontier.fetch.fetcher import hermetic_fetch
+from spark_frontier.functions.urls import sha256_hex_sql
 from spark_frontier.functions import bloom as _bloom
 from spark_frontier.functions.bloom import (
     BITS_PER_KEY,
@@ -92,6 +93,15 @@ LINK_COLUMNS = [
     "site_id", "url", "canon_url", "url_key", "url_hash", "host", "image_id",
     "caption", "title", "sport_category", "lastmod", "published_at",
     "http_code", "is_valid", "invalid_reason", "psnr_db", "first_seen_at",
+]
+# The links table's scan-time projection of the wave's fetch_log files.
+# url_hash (V10 sha256 raw-URL parity, repository.py:92-94) is a pure
+# function of url that nothing in the cycle reads, so the lineage does
+# not store it: the view derives it on read, and column pruning drops the
+# sha2 for every reader that does not select it.
+LINK_VIEW = [
+    f"{sha256_hex_sql('url')} AS url_hash" if c == "url_hash" else c
+    for c in LINK_COLUMNS
 ]
 
 
@@ -537,16 +547,10 @@ def build_link_rows(
     per-distinct-text content scoring), value-identical to the all-JVM
     chain (grid parity test); steps 1-2 stay JVM."""
     from spark_frontier.extract.category import with_category
-    from spark_frontier.functions.urls import sha256_hex
 
     rows = validated.withColumn("title", F.col("news_title")).withColumn(
         "published_at",
         F.coalesce(F.col("news_publication_date"), F.col("lastmod")),
-    ).withColumn(
-        # V10 sha256 raw-URL parity (repository.py:92-94), computed HERE —
-        # post-fetch, JVM-side — so the 64-char hex never rides the
-        # frontier shuffles upstream
-        "url_hash", sha256_hex(F.col("url"))
     )
     if sites is not None:
         rows = rows.join(
@@ -566,7 +570,10 @@ def build_link_rows(
     return (
         rows.withColumn("first_seen_at", F.lit(batch_ts))
         .withColumn("is_valid", F.coalesce(F.col("is_valid"), F.lit(False)))
-        .select(*LINK_COLUMNS, *(keep or []))
+        # no url_hash (V10): the links view derives it from url on read
+        # (LINK_VIEW), so the 64-char hex is never stored per wave row
+        .select(*(c for c in LINK_COLUMNS if c != "url_hash"),
+                *(keep or []))
     )
 
 
@@ -788,14 +795,14 @@ def run_crawl_cycle(
                 # The wave was exactly deduped against (seen ∪ attempted),
                 # so every valid key is NEW: the upsert is an APPEND, and a
                 # METADATA-ONLY one — the lineage files are registered into
-                # links as an (is_valid, LINK_COLUMNS) view. The next wave
+                # links as an (is_valid, LINK_VIEW) view. The next wave
                 # dedups against (seen snapshot ∪ attempted), never the
                 # new links, so the append rides the async lane; a crash
                 # before it re-crawls the wave on resume (its keys are
                 # still absent from links).
                 lanes.submit(
                     "links", links_tbl.append_shared_files, wave_files,
-                    where="is_valid", columns=list(LINK_COLUMNS),
+                    where="is_valid", columns=LINK_VIEW,
                     summary={"op": "wave", "wave": wave, "rows": n_wave,
                              "fetched_ok": n_ok, "valid": n_valid},
                 )
@@ -933,6 +940,8 @@ def retention_cleanup(store: SnapStore, spark: SparkSession,
                   f"- INTERVAL {ttl_days} DAYS")
         bloom = store.table("bloom")
         n_seg = bloom.summary().get("n_segments")
+        # a rewrite of the links view: the kept rows' derived url_hash
+        # (LINK_VIEW) is stored physically from here on
         links.delete_where(
             cutoff,
             spark,

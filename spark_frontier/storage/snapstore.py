@@ -47,10 +47,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 # zstd, not snappy: the wave's fetch_log rows are most of a cycle's
-# bytes, and their 64-hex url_hash needs entropy coding, which snappy
-# lacks. Measured against snappy on 4 CPUs: one crawl cycle's fetch_log
-# 1.44 → 0.90 MB, a 10k-doc funnel's corpus_docs 4.06 → 2.18 MB, and the
-# wave's write no slower (2.04 → 1.64 s, one traced cycle each).
+# bytes, and their URL strings and the bloom bitmap need entropy coding,
+# which snappy lacks. Measured against snappy on 4 CPUs, the column
+# chunks one crawl_fresh cycle adds (perfbench world, seed 1): 458 →
+# 358 KB in all (url and canon_url 77 → 46 KB each, the bloom bitmap
+# 60 → 39 KB; url_key, 113 KB, does not shrink). A 10k-doc funnel's
+# corpus_docs: 4.06 → 2.18 MB. The wave's write was no slower (2.04 →
+# 1.64 s, one traced cycle each, when fetch_log still stored url_hash).
 CODEC = "zstd"
 
 
@@ -158,12 +161,19 @@ class SnapTable:
         already wrote, viewed through an optional row predicate and
         column projection (Iceberg's ``add_files`` + a merge-on-read
         validity predicate). The crawl cycle uses this to commit the
-        links table as a (is_valid, LINK_COLUMNS) view of the wave's
+        links table as a (is_valid, LINK_VIEW) view of the wave's
         fetch-lineage files — the commit is a manifest write, so the
         cycle's tail no longer re-serializes every wave row a second
         time. Readers apply the predicate/projection at scan time
         (parquet column pruning makes the projection free; the filter is
         one codegen comparison per row).
+
+        ``where`` is a SQL predicate and each of ``columns`` a SQL
+        expression, so a view may derive a column instead of storing it
+        (``"sha2(url, 256) AS url_hash"``); the optimizer prunes a
+        derived column that a reader does not select. A rewrite of the
+        table (``compact``, ``delete_where``, ``merge``) stores the
+        derived values physically.
 
         Ownership note: SnapStore never physically deletes data files
         (rewrite commits leave prior files for time travel), so shared
@@ -291,8 +301,10 @@ class SnapTable:
         """Compose a DataFrame from manifest entries: plain paths scan
         as-is; shared entries ({path, where, columns}) scan grouped by
         their (where, columns) view with the predicate/projection
-        applied. All groups union by name, so every entry must resolve
-        to the table's schema."""
+        applied. A view's columns are SQL expressions (``selectExpr``):
+        a plain name selects the column, so manifests that hold only
+        names read as before. All groups union by name, so every entry
+        must resolve to the table's schema."""
         from collections import defaultdict
 
         plain = [e for e in entries if not isinstance(e, dict)]
@@ -312,7 +324,7 @@ class SnapTable:
             if where:
                 df = df.filter(where)
             if cols:
-                df = df.select(*cols)
+                df = df.selectExpr(*cols)
             dfs.append(df)
         out = dfs[0]
         for d in dfs[1:]:

@@ -1,9 +1,12 @@
+import hashlib
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from spark_frontier.pipeline.crawl import (
+    LINK_COLUMNS,
     load_world,
     retention_cleanup,
     run_crawl_cycle,
@@ -76,6 +79,30 @@ def test_cycle_end_to_end(spark, world, tmp_path_factory):
     # lineage counters checkpointed per wave
     hist = store.table("links").history()
     assert any(h["summary"].get("op") == "wave" for h in hist)
+
+
+def test_links_view_derives_url_hash(spark, world, tmp_path_factory):
+    """V10 url_hash (sha256 of the raw url, repository.py:92-94) is a
+    pure function of url: the wave's fetch_log files do not store it, and
+    the links view derives it at scan time, in LINK_COLUMNS order, for
+    seeded and crawled rows alike."""
+    store = _fresh_store(tmp_path_factory)
+    seed_seen_store(store, world["url_seen"])
+    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+
+    lineage = store.table("fetch_log").current_files()
+    assert lineage
+    for p in lineage:
+        assert "url_hash" not in pq.read_schema(p).names, p
+
+    links = store.table("links").read(spark)
+    assert links.columns == LINK_COLUMNS
+    rows = links.select("url", "url_hash", "is_valid").collect()
+    seeded = [r for r in rows if r["is_valid"] is None]
+    crawled = [r for r in rows if r["is_valid"]]
+    assert seeded and crawled and len(seeded) + len(crawled) == len(rows)
+    for r in rows:
+        assert r["url_hash"] == hashlib.sha256(r["url"].encode()).hexdigest()
 
 
 def test_second_cycle_is_incremental(spark, world, tmp_path_factory):
@@ -409,10 +436,18 @@ def test_bloom_probe_parity_and_retention_catchup(
     st = stores["distributed"]
     bloom = st.table("bloom")
     assert bloom.summary()["op"] == "bloom_build"
-    n_before = st.table("links").read(spark).count()
+    before = {r["url_key"]: r for r in st.table("links").read(spark).collect()}
     retention_cleanup(st, spark, now=NOW, ttl_days=2)
-    n_after = st.table("links").read(spark).count()
-    assert n_after < n_before
+    after = st.table("links").read(spark).collect()
+    n_after = len(after)
+    assert n_after < len(before)
+    # the survivors are the same rows, url_hash included; the rewrite
+    # reads the links view, so it now STORES the derived url_hash
+    assert any(r["is_valid"] for r in after)
+    assert all(r == before[r["url_key"]] for r in after)
+    for e in st.table("links").current_files():
+        assert not isinstance(e, dict)
+        assert "url_hash" in pq.read_schema(e).names
     meta = bloom.summary()
     assert meta["op"] == "bloom_rebuild_after_retention"
     assert meta["covers_links"] == st.table("links").snapshot_id

@@ -201,7 +201,9 @@ def test_append_shared_files_view_and_maintenance(spark, tmp_path):
     as a (where, columns) view of another table's files reads exactly
     the filtered projection; incremental reads see shared deltas; a
     rewrite (compact) converts the view into owned files with identical
-    rows."""
+    rows. A view column may be a SQL expression, derived on every read
+    and stored by a rewrite; plain names (all that manifests held before
+    expressions) read as a plain projection."""
     from spark_frontier.storage.snapstore import SnapStore
 
     store = SnapStore(str(tmp_path / "wh"))
@@ -220,7 +222,7 @@ def test_append_shared_files_view_and_maintenance(spark, tmp_path):
         summary={"op": "wave"},
     )
     got = links.read(spark)
-    assert sorted(got.columns) == ["url", "url_key"]
+    assert got.columns == ["url_key", "url"]
     want = sorted(k for k, _, v, _ in rows if v)
     assert sorted(r["url_key"] for r in got.collect()) == want
 
@@ -255,6 +257,29 @@ def test_append_shared_files_view_and_maintenance(spark, tmp_path):
     assert sorted(
         r["url_key"] for r in links.read_at(spark, sid0).collect()
     ) == want
+
+    # an expression column is derived by read, read_changes and read_at
+    derived = store.table("derived")
+    view = ["url_key", "upper(url) AS url_u"]
+    sid_d = derived.append_shared_files(files, where="is_valid",
+                                        columns=view)
+
+    def _url_u(df):
+        return {r["url_key"]: r["url_u"] for r in df.collect()}
+
+    want_u = {k: u.upper() for k, u, v, _ in rows if v}
+    got = derived.read(spark)
+    assert got.columns == ["url_key", "url_u"]
+    assert _url_u(got) == want_u
+    derived.append_shared_files(files2, where="is_valid", columns=view)
+    assert _url_u(derived.read_changes(spark, sid_d)) == {200: "U200"}
+
+    # compaction stores the derived values in owned files
+    assert derived.compact(spark, target_file_bytes=1 << 30) is not None
+    owned = derived.current_files()
+    assert all(not isinstance(e, dict) for e in owned)
+    assert _url_u(spark.read.parquet(*owned)) == {**want_u, 200: "U200"}
+    assert _url_u(derived.read_at(spark, sid_d)) == want_u
 
 
 def test_expire_snapshots_and_gc_orphans(tmp_path):

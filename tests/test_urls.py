@@ -5,6 +5,7 @@ from spark_frontier.functions.urls import (
     canonicalize_url,
     host_of,
     sha256_hex,
+    sha256_hex_sql,
     url_key,
 )
 
@@ -52,6 +53,7 @@ def test_spark_cols(spark):
         canonicalize_url("url").alias("canon"),
         url_key(F.col("url")).alias("key"),
         sha256_hex(F.col("url")).alias("sha"),
+        F.expr(sha256_hex_sql("url")).alias("sha_sql"),
         host_of(F.col("url")).alias("host"),
     ).collect()
     assert out[0]["canon"] == "http://example.com/a/b"
@@ -62,6 +64,8 @@ def test_spark_cols(spark):
     import hashlib
 
     assert out[1]["sha"] == hashlib.sha256(b"https://news.site/x?id=2").hexdigest()
+    # the SQL form (the links view's derived url_hash) is the same hash
+    assert [r["sha_sql"] for r in out] == [r["sha"] for r in out]
 
 
 def test_key_stable_across_variants(spark):
